@@ -182,10 +182,31 @@ def test_probe_missing_or_partial_yields_no_verdict(monkeypatch):
         assert comparable is True and reason is None
 
 
-def test_calibration_probe_is_fixed_work():
-    # two adjacent samples on an idle host agree well inside the 1.3x
-    # allowance — the probe's own scatter cannot downgrade a quiet run
-    a = bench.calibration_probe()
-    b = bench.calibration_probe()
-    assert a > 0 and b > 0
-    assert max(a, b) / min(a, b) < 1.3
+def test_calibration_probe_is_fixed_work(monkeypatch):
+    # The real probe only has to yield a usable sample: two wall-clock
+    # samples on a throttled host may disagree by more than 1.3x, which
+    # is exactly what the probe exists to detect. Drift detection itself
+    # is exercised with synthetic samples on both sides of the default
+    # allowance.
+    import math
+
+    sample = bench.calibration_probe(reps=1)
+    assert sample > 0 and math.isfinite(sample)
+
+    monkeypatch.delenv("SPARK_GRAFT_PROBE_DRIFT_MAX", raising=False)
+    allowed = bench.PROBE_DRIFT_MAX_DEFAULT
+
+    def verdict(probes):
+        return bench.comparability_downgrade(
+            True, midrun_load_max=10.0, midrun_threshold=24.0,
+            load_threshold=2.0, end_loadavg=[1.0, 1.0, 1.0],
+            n_cross_flags=0, probe_times=probes,
+        )
+
+    drifting = {"start": 0.50, "mid": 0.50 * allowed * 1.05, "end": 0.52}
+    comparable, reason, _ = verdict(drifting)
+    assert comparable is False and "calibration probe" in reason
+
+    steady = {"start": 0.50, "mid": 0.50 * allowed * 0.95, "end": 0.55}
+    comparable, reason, _ = verdict(steady)
+    assert comparable is True and reason is None

@@ -46,3 +46,64 @@ def test_relationships_counts_orphans(spark):
     parent = spark.createDataFrame([(1,), (2,), (3,)], "pk int")
     r = checks.relationships(child, "fk", parent, "pk")
     assert r.n_violations == 1  # 99 is an orphan; NULL fk is exempt
+
+
+def _one_by_one(df, spec):
+    """The spec evaluated one check at a time, in run_checks' order."""
+    out = [checks.not_null(df, c) for c in spec.get("not_null", [])]
+    out += [
+        checks.accepted_values(df, c, vals)
+        for c, vals in spec.get("accepted_values", {}).items()
+    ]
+    for key in spec.get("unique", []):
+        cols = [key] if isinstance(key, str) else list(key)
+        out.append(checks.unique(df, *cols))
+    return out
+
+
+def test_run_checks_equals_single_checks(spark):
+    """run_checks folds the columnar sums into the first unique key's
+    grouped pass; every result and its position must equal the single
+    checks called one by one, on a frame with NULL keys, duplicate keys
+    and an all-NULL column, and on an empty frame."""
+    schema = "k int, g string, status string, empty int"
+    df = spark.createDataFrame(
+        [
+            (1, "a", "F", None),
+            (1, "a", "X", None),       # duplicate (k, g)
+            (2, "b", None, None),
+            (None, "b", "O", None),    # NULL key
+            (None, "b", "Q", None),    # second NULL key: a duplicate
+            (None, None, "P", None),
+            (3, None, "O", None),
+        ],
+        schema,
+    )
+    specs = {
+        "full": {
+            "not_null": ["k", "g", "empty"],
+            "unique": [["k"]],
+            "accepted_values": {"status": ["F", "O", "P"]},
+        },
+        "two_unique_keys": {
+            "not_null": ["empty"],
+            "unique": [["k", "g"], "g"],
+            "accepted_values": {"status": ["F", "O"]},
+        },
+        "columnar_only": {
+            "not_null": ["k", "empty"],
+            "accepted_values": {"status": ["F"], "g": ["a"]},
+        },
+        "unique_only": {"unique": [["k"], ["k", "g"], ["empty"]]},
+        "empty_spec": {},
+    }
+    for frame in (df, spark.createDataFrame([], schema)):
+        for name, spec in specs.items():
+            got = checks.run_checks(frame, spec)
+            assert got == _one_by_one(frame, spec), name
+    assert checks.run_checks(df, {}) == []
+    # the frame really exercises the edge cases it names
+    full = {(r.check, r.column): r.n_violations for r in checks.run_checks(df, specs["full"])}
+    assert full[("not_null", "empty")] == 7  # all-NULL column
+    assert full[("unique", "k")] == 3  # k=1 twice, NULL three times
+    assert full[("accepted_values", "status")] == 2  # X, Q; NULL exempt

@@ -171,6 +171,59 @@ def test_sink_fn_mode_matches_default_mode(spark, sf_dir, fresh_dirs):
         )
 
 
+def test_failed_sink_leaves_store_unchanged(spark, sf_dir, fresh_dirs):
+    """A ``sink_fn`` that raises must leave the sigs and bands stores
+    exactly as they were, so a foreachBatch retry of the tick sees the
+    pre-tick store; the retried tick then sinks the fault-free pairs."""
+    store, _, stage = fresh_dirs
+    docs = load_tables(spark, sf_dir, "documents")["documents"]
+    corpus = docs.where(F.col("doc_id") < INCR_SPLIT)
+    batch = docs.where(F.col("doc_id") >= INCR_SPLIT)
+    persist_minhash_store(corpus, store, checkable=True)
+
+    def files():
+        return {
+            sub: sorted(
+                os.path.relpath(os.path.join(root, n), store)
+                for root, _dirs, names in os.walk(os.path.join(store, sub))
+                for n in names
+            )
+            for sub in ("sigs", "bands")
+        }
+
+    before = files()
+
+    def failing_sink(pairs):
+        pairs.count()  # the pairs are fully computed, then the sink dies
+        raise RuntimeError("sink failed")
+
+    with pytest.raises(RuntimeError, match="sink failed"):
+        incremental_minhash_dedup(
+            spark, batch, store, threshold=0.2, append=True,
+            checkable=True, within_batch=True, sink_fn=failing_sink,
+        )
+    assert files() == before
+
+    sink = stage + "_sink"
+    incremental_minhash_dedup(
+        spark, batch, store, threshold=0.2, append=True,
+        checkable=True, within_batch=True,
+        sink_fn=lambda pairs: pairs.write.mode("append").parquet(sink),
+    )
+    retried = _normalized(spark.read.parquet(sink))
+    store_b = fresh_dirs[1]
+    persist_minhash_store(corpus, store_b, checkable=True)
+    fault_free = _normalized(
+        incremental_minhash_dedup(
+            spark, batch, store_b, threshold=0.2, append=False,
+            checkable=True, within_batch=True,
+        )
+    )
+    assert retried == fault_free and retried
+    for sub in ("sigs", "bands"):
+        assert len(files()[sub]) > len(before[sub])  # the retry appended
+
+
 def test_registered_query_is_deterministic(spark, sf_dir):
     from ytspark.streaming.queries import streaming_incremental_dedup
 

@@ -13,27 +13,36 @@ from ytspark.sources.youtube import REFERENCE_CHANNEL_TITLES, poll_tick
 from ytspark.streaming.pipeline import run_microbatch_ingest, run_source_stream_ingest
 
 
+def _slug(title: str) -> str:
+    """The reference's channel slug (``dags/extract.py:115``)."""
+    return "_".join(title.replace("-", " ").split("/")[0].split(" "))
+
+
 def test_file_drop_ingest_available_now(spark, tmp_path):
-    """Two payload-file drops → availableNow → bronze has one row per
-    (channel, drop), partitioned by channel_key."""
+    """Two poll ticks, each dropped as one file and ingested as its own
+    availableNow micro-batch on one checkpoint → bronze has one row per
+    (channel, tick), and each batch lands as ONE parquet file under its
+    ``ingest_batch=<id>`` directory, with ``channel_key`` a data column."""
     payload_dir = str(tmp_path / "landing")
     os.makedirs(payload_dir)
+    bronze = str(tmp_path / "bronze")
     for tick in range(2):
         with open(os.path.join(payload_dir, f"tick_{tick}.json"), "w") as f:
             for payload in poll_tick(tick=tick):
                 f.write(json.dumps(payload) + "\n")
-    bronze = str(tmp_path / "bronze")
-    q = run_microbatch_ingest(
-        spark, payload_dir, bronze, str(tmp_path / "ckpt")
-    )
-    q.awaitTermination()
+        q = run_microbatch_ingest(
+            spark, payload_dir, bronze, str(tmp_path / "ckpt")
+        )
+        q.awaitTermination()
     out = spark.read.parquet(bronze)
     assert out.count() == 2 * len(REFERENCE_CHANNEL_TITLES)
-    keys = {
-        os.path.basename(p).split("=")[1]
-        for p in glob.glob(bronze + "/ingest_batch=*/channel_key=*")
-    }
-    assert len(keys) == len(REFERENCE_CHANNEL_TITLES)
+    batch_dirs = glob.glob(bronze + "/ingest_batch=*")
+    assert len(batch_dirs) == 2
+    for d in batch_dirs:
+        assert len(glob.glob(d + "/*.parquet")) == 1, d
+        assert not glob.glob(d + "/channel_key=*"), d
+    keys = {r["channel_key"] for r in out.select("channel_key").distinct().collect()}
+    assert keys == {_slug(t) for t in REFERENCE_CHANNEL_TITLES}
 
 
 def test_source_stream_ingest_two_ticks(spark, tmp_path):
@@ -62,11 +71,8 @@ def test_source_stream_ingest_two_ticks(spark, tmp_path):
         q.stop()
     out = spark.read.parquet(bronze)
     assert out.count() >= 4
-    # both channels landed, slugged partition dirs exist
-    keys = {
-        os.path.basename(p).split("=")[1]
-        for p in glob.glob(bronze + "/ingest_batch=*/channel_key=*")
-    }
+    # both channels landed, slugged channel_key column values
+    keys = {r["channel_key"] for r in out.select("channel_key").distinct().collect()}
     assert {"MrBeast", "PewDiePie"} <= keys
     # every (channel, snapshot) is distinct — no replay dupes
     assert (

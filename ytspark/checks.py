@@ -11,8 +11,9 @@ DataFrame aggregates.
 Scale notes: every check compiles to a single aggregate over the table
 (violation COUNT, not violation rows), so a full check suite is one
 scan with map-side partials per check target; ``run_checks`` merges
-same-table checks into ONE aggregate pass per table. Use
-``violations()`` when the offending rows themselves are wanted.
+same-table checks into ONE aggregate pass per table (plus one grouped
+pass for each unique key after the first). Use ``violations()`` when
+the offending rows themselves are wanted.
 """
 
 from __future__ import annotations
@@ -59,14 +60,17 @@ def unique(df: DataFrame, *cols: str) -> CheckResult:
     return CheckResult("unique", ",".join(cols), int(n))
 
 
-def accepted_values(df: DataFrame, col: str, values: Sequence) -> CheckResult:
-    """dbt ``accepted_values``: every non-null value in the allowlist."""
-    bad = F.sum(
+def _accepted_values_violations(col: str, values: Sequence) -> Column:
+    return F.sum(
         F.when(
             F.col(col).isNotNull() & ~F.col(col).isin(list(values)), 1
         ).otherwise(0)
     )
-    n = df.agg(bad.alias("n")).first()["n"] or 0
+
+
+def accepted_values(df: DataFrame, col: str, values: Sequence) -> CheckResult:
+    """dbt ``accepted_values``: every non-null value in the allowlist."""
+    n = df.agg(_accepted_values_violations(col, values).alias("n")).first()["n"] or 0
     return CheckResult("accepted_values", col, int(n))
 
 
@@ -94,35 +98,54 @@ def violations(df: DataFrame, predicate: Column) -> DataFrame:
 
 def run_checks(df: DataFrame, spec: dict) -> list[CheckResult]:
     """Run a schema.yml-shaped spec against one table in ONE aggregate
-    pass for the columnar checks (not_null / accepted_values) plus one
-    grouped pass per unique key.
+    pass: the columnar checks (not_null / accepted_values) ride as
+    per-group partial sums in the first unique key's grouped pass, so
+    that pass answers all of them at once. Further unique keys add one
+    grouped pass each; a spec without a unique key is one global
+    aggregate. Results come in spec order — not_null, accepted_values,
+    unique — equal to calling the single checks one by one.
 
     spec = {"not_null": ["a", "b"],
             "unique": [["a"], ["a", "b"]],
             "accepted_values": {"status": ["F", "O", "P"]}}
     """
-    aggs: list[Column] = []
+    sums: list[Column] = []
     labels: list[tuple[str, str]] = []
     for col in spec.get("not_null", []):
-        aggs.append(_not_null_violations(col).alias(f"nn_{col}"))
+        sums.append(_not_null_violations(col))
         labels.append(("not_null", col))
     for col, vals in spec.get("accepted_values", {}).items():
-        aggs.append(
-            F.sum(
-                F.when(
-                    F.col(col).isNotNull() & ~F.col(col).isin(list(vals)), 1
-                ).otherwise(0)
-            ).alias(f"av_{col}")
-        )
+        sums.append(_accepted_values_violations(col, vals))
         labels.append(("accepted_values", col))
-    out: list[CheckResult] = []
-    if aggs:
-        row = df.agg(*aggs).first()
-        for (kind, col), value in zip(labels, row):
-            out.append(CheckResult(kind, col, int(value or 0)))
-    for key in spec.get("unique", []):
-        cols = [key] if isinstance(key, str) else list(key)
-        out.append(unique(df, *cols))
+    keys = [
+        [key] if isinstance(key, str) else list(key)
+        for key in spec.get("unique", [])
+    ]
+    names = [f"__v{i}" for i in range(len(sums))]
+    if keys:
+        # per-key partials, then one global sum: a sum of group sums is
+        # the table sum, so the columnar counts equal the global pass
+        row = (
+            df.groupBy(*keys[0])
+            .agg(
+                F.count(F.lit(1)).alias("__rows"),
+                *[s.alias(n) for s, n in zip(sums, names)],
+            )
+            .agg(
+                *[F.sum(n).alias(n) for n in names],
+                F.sum(F.col("__rows") - 1).alias("__dup"),
+            )
+            .first()
+        )
+    elif sums:
+        row = df.agg(*[s.alias(n) for s, n in zip(sums, names)]).first()
+    out = [
+        CheckResult(kind, col, int(row[n] or 0))
+        for (kind, col), n in zip(labels, names)
+    ]
+    if keys:
+        out.append(CheckResult("unique", ",".join(keys[0]), int(row["__dup"] or 0)))
+    out.extend(unique(df, *cols) for cols in keys[1:])
     return out
 
 

@@ -1866,9 +1866,11 @@ def incremental_minhash_dedup(
     itself — e.g. the streaming tick's parquet-sink append. When
     given, that single write replaces the eager ``localCheckpoint``
     as the pre-append materialization (one full computation of the
-    pairs instead of compute-then-re-read-and-write), and the two
-    store appends then run CONCURRENTLY (guide §2.6 — independent
-    jobs over the already-persisted batch signatures). The function
+    pairs instead of compute-then-re-read-and-write). The store
+    appends run only after ``sink_fn`` returns, so a raising sink
+    leaves the store as it was and the tick can be retried; the two
+    appends then run CONCURRENTLY (guide §2.6 — independent jobs over
+    the already-persisted batch signatures). The function
     returns ``None`` in this mode: the caller owns the materialized
     result, and the in-memory ``pairs`` lineage must not be reused
     after the appends mutate the store. ``sink_fn`` must fully
@@ -1968,27 +1970,18 @@ def incremental_minhash_dedup(
         ).parquet(path + "/bands")
 
     if sink_fn is not None:
-        # r13: all THREE tick writes overlap (guide §2.6). Safe because
-        # (a) the pair plan's store scans hold the file listing
-        # snapshot taken at spark.read.parquet() above — a parquet
-        # APPEND only adds new part-files, never touches listed ones,
-        # so the sink write computes the same pre-append pair set
-        # whether or not the appends run beside it; (b) the batch
-        # signature pipeline is materialized into the cache ONCE first
-        # (the count below), so the three concurrent consumers read the
-        # cache instead of racing to compute it thrice. Sequential
-        # spans per tick: sig-compute + max(sink, appends) instead of
-        # (sig + sink) + appends.
+        # The sink runs FIRST and alone, so a failing sink leaves the
+        # store untouched: a foreachBatch retry of the tick then sees
+        # the same store and neither duplicates store rows nor pairs
+        # the batch with itself. Only the two store appends, which
+        # read the batch signatures cached by the sink's pass, overlap
+        # (guide §2.6).
         try:
-            new_sigs.count()  # fill the cache once
+            sink_fn(pairs)
             if append:
                 from ytspark.plans.scale import concurrent_jobs
 
-                concurrent_jobs(
-                    lambda: sink_fn(pairs), _append_sigs, _append_bands
-                )
-            else:
-                sink_fn(pairs)
+                concurrent_jobs(_append_sigs, _append_bands)
         finally:
             new_sigs.unpersist()
         return None

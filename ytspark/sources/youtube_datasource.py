@@ -188,8 +188,9 @@ class YouTubeStreamReader(SimpleDataSourceStreamReader):
     offsets is deterministic. Deterministic replay alone is
     at-least-once; the effectively-once guarantee comes from pairing it
     with an idempotent sink (``streaming.pipeline.
-    write_batch_idempotent``, batch-keyed dynamic partition
-    overwrite)."""
+    write_batch_idempotent``: bronze partitioned by ``ingest_batch``
+    only, with ``channel_key`` a data column, and a replayed batch
+    rewritten through dynamic partition overwrite)."""
 
     def __init__(self, options):
         self.mode = options.get("mode", "fixture")

@@ -3,8 +3,9 @@
 ``run_microbatch_ingest`` is the Spark-native equivalent of the
 reference's `extract ≫ load` DAG chain (``dags/extract.py:196-217``):
 each micro-batch runs the same pure transform the batch path uses
-(``ingest.transform_responses``) and appends to the same partitioned
-bronze parquet — one code path, two execution modes.
+(``ingest.transform_responses``) and lands it in bronze parquet under
+one ``ingest_batch=<id>`` partition per micro-batch — one code path,
+two execution modes.
 """
 
 from __future__ import annotations
@@ -26,8 +27,15 @@ def write_batch_idempotent(
     ``mode("append")`` would duplicate the replayed rows; instead each
     batch lands under its own ``ingest_batch=<batch_id>`` partition via
     DYNAMIC partition overwrite, so a replay overwrites exactly the
-    partitions it wrote before — idempotent, hence effectively-once
+    partition it wrote before — idempotent, hence effectively-once
     end to end (deterministic source replay + idempotent sink).
+
+    The batch is the only partition level: each write task emits one
+    file, so a single-file poll tick lands as ONE file rather than one
+    per channel. A ``channel_key`` sub-level would prune nothing — a
+    per-channel read still opens one file per batch — while multiplying
+    the files every later scan opens by the channel count.
+    ``channel_key`` stays a data column.
     """
     from pyspark.sql import functions as F
 
@@ -35,7 +43,7 @@ def write_batch_idempotent(
         batch_df.withColumn("ingest_batch", F.lit(batch_id))
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("ingest_batch", "channel_key")
+        .partitionBy("ingest_batch")
         .parquet(bronze_path)
     )
 
@@ -62,8 +70,9 @@ def run_source_stream_ingest(
     """The fully-streaming form of the reference pipeline: the custom
     streaming DataSource (``ytspark.sources.youtube_datasource``, one
     poll tick per micro-batch, offsets = ticks) feeds the SAME pure
-    transform the batch path uses, writing to the same partitioned
-    bronze — fetch ≫ flatten ≫ stamp ≫ write, no external scheduler
+    transform the batch path uses, writing to the same batch-partitioned
+    bronze (one file per source partition, i.e. per channel, each
+    tick) — fetch ≫ flatten ≫ stamp ≫ write, no external scheduler
     (contrast: the reference re-runs a batch DAG on a cron,
     ``dags/optimized_extract.py:118``). Effectively-once: offsets make
     the source replay deterministic and ``write_batch_idempotent``
