@@ -496,6 +496,33 @@ def comparability_downgrade(
     return comparable, None, None
 
 
+def receipt_paths(
+    root: str, sf, cpus: int, record_sf=None, record_cpus: int | None = None
+) -> tuple[str, str | None]:
+    """Detail receipts a comparable run writes, as (per_core, main).
+
+    The SF of record and its core count are those of the main
+    ``BENCH_DETAIL.json`` (``None`` when there is none: any run may
+    establish them). The per-core receipt is always written (r12
+    VERDICT item 7: the c8 scaling run overwrote the c32 detail):
+    ``BENCH_DETAIL_c<cpus>.json`` at the SF of record,
+    ``BENCH_DETAIL_sf<sf>_c<cpus>.json`` at any other SF, so a
+    verify/debug run at another SF neither clobbers the record nor
+    goes unrecorded. The main receipt, the consecutive-run baseline,
+    is refreshed only at the SF of record AND its core count
+    (``None`` otherwise)."""
+    at_record_sf = record_sf is None or sf == record_sf
+    per_core = (
+        "BENCH_DETAIL_c%d.json" % cpus
+        if at_record_sf
+        else "BENCH_DETAIL_sf%s_c%d.json" % (sf, cpus)
+    )
+    main = None
+    if at_record_sf and (record_cpus is None or record_cpus == cpus):
+        main = os.path.join(root, "BENCH_DETAIL.json")
+    return os.path.join(root, per_core), main
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -626,10 +653,12 @@ def main() -> None:
     # were taken at 32 cores (historical fact, not a tuning knob).
     regressions: list[dict] = []
     prev_cpus = None
+    prev_sf = None
     try:
         with open(detail_path) as fh:
             prev = json.load(fh)
         prev_cpus = int(prev.get("cpus", 32))
+        prev_sf = prev.get("sf", sf_val)
         if prev.get("sf") == sf_val and prev_cpus == cpus:
             for name, t in timings.items():
                 p = prev.get("queries", {}).get(name)
@@ -714,36 +743,16 @@ def main() -> None:
     # next run's regression baseline.
     print(json.dumps(verbose))
     detail_written = None
-    # scale-factor guard (same failure class as the c8 overwrite): a
-    # verify/debug run at another SF must not clobber the sf-of-record
-    # receipts. The SF of record is whatever the main detail file was
-    # taken at; with no main detail any SF may establish it.
-    sf_of_record = sf_val
-    try:
-        with open(detail_path) as fh:
-            sf_of_record = json.load(fh).get("sf", sf_val)
-    except (OSError, ValueError):
-        pass
-    if comparable and sf_val == sf_of_record:
-        # per-core-count detail is ALWAYS written (r12 VERDICT item 7:
-        # the c8 scaling run overwrote the c32 detail and erased the
-        # per-query scaling evidence); the consecutive-run baseline file
-        # is only refreshed by a run at ITS core count.
-        cpus_detail_path = os.path.join(
-            os.path.dirname(os.path.abspath(__file__)),
-            "BENCH_DETAIL_c%d.json" % cpus,
-        )
-        try:
-            with open(cpus_detail_path, "w") as fh:
-                json.dump(verbose, fh, indent=2)
-            detail_written = os.path.basename(cpus_detail_path)
-        except OSError:
-            pass
-        if prev_cpus is None or prev_cpus == cpus:
+    if comparable:
+        for path in receipt_paths(
+            os.path.dirname(detail_path), sf_val, cpus, prev_sf, prev_cpus
+        ):
+            if path is None:
+                continue
             try:
-                with open(detail_path, "w") as fh:
+                with open(path, "w") as fh:
                     json.dump(verbose, fh, indent=2)
-                detail_written = os.path.basename(detail_path)
+                detail_written = os.path.basename(path)
             except OSError:
                 pass
     # Surface the last committed full-registry oracle_check summary so

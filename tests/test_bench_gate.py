@@ -210,3 +210,26 @@ def test_calibration_probe_is_fixed_work(monkeypatch):
     steady = {"start": 0.50, "mid": 0.50 * allowed * 0.95, "end": 0.55}
     comparable, reason, _ = verdict(steady)
     assert comparable is True and reason is None
+
+
+def test_receipt_paths_key_other_sf_by_sf(tmp_path):
+    # The SF and core count of record come from the main BENCH_DETAIL.json;
+    # the per-core receipt is written at every SF, the main one only at
+    # the record SF and its core count.
+    root = str(tmp_path)
+
+    def names(sf, cpus):
+        per_core, main = bench.receipt_paths(
+            root, sf, cpus, record_sf=0.1, record_cpus=8
+        )
+        assert os.path.dirname(per_core) == root
+        return os.path.basename(per_core), main and os.path.basename(main)
+
+    assert names(0.1, 8) == ("BENCH_DETAIL_c8.json", "BENCH_DETAIL.json")
+    assert names(0.01, 8) == ("BENCH_DETAIL_sf0.01_c8.json", None)
+    assert names(0.1, 4) == ("BENCH_DETAIL_c4.json", None)
+    assert names(0.01, 4) == ("BENCH_DETAIL_sf0.01_c4.json", None)
+    # no main receipt yet: any SF and core count establishes the record
+    per_core, main = bench.receipt_paths(root, 0.01, 4)
+    assert os.path.basename(per_core) == "BENCH_DETAIL_c4.json"
+    assert main == os.path.join(root, "BENCH_DETAIL.json")

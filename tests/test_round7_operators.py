@@ -192,7 +192,7 @@ def test_minhash_band_store_writes_one_file_per_band(spark):
         [(i, f"tok{i} " * 12) for i in range(40)], "doc_id long, text string"
     )
     with tempfile.TemporaryDirectory() as d:
-        persist_minhash_store(docs, d + "/store", checkable=True)
+        persist_minhash_store(docs, d + "/store")
         band_dirs = glob.glob(d + "/store/bands/band_id=*")
         assert band_dirs, "no band partitions written"
         for bd in band_dirs:

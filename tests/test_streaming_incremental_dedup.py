@@ -1,9 +1,10 @@
 """Streaming incremental dedup: the registered query is hash-certified
 against a batch-collapse DuckDB oracle (round 4); this test covers the
-function-level store lifecycle with the PRODUCTION xxhash64 hash family
-— the foreachBatch stream must produce exactly the pairs that
-sequential batch ticks over the same slices produce — plus the
-within-batch pairing the certified query relies on."""
+function-level store lifecycle (the store's one hash family, the
+polynomial "poly" family the oracles replay) — the foreachBatch stream
+must produce exactly the pairs that sequential batch ticks over the
+same slices produce — plus the within-batch pairing the certified
+query relies on."""
 
 from __future__ import annotations
 
@@ -103,7 +104,7 @@ def test_within_batch_pairing_catches_same_tick_dups(spark, tmp_path):
         "doc_id bigint, text string",
     )
     path = str(tmp_path / "wb_store")
-    persist_minhash_store(corpus, path, checkable=True)
+    persist_minhash_store(corpus, path)
     batch = spark.createDataFrame(
         [(10, base + "tail one"), (11, base + "tail two"),
          (12, "novel body of words nothing alike " * 7)],
@@ -112,14 +113,14 @@ def test_within_batch_pairing_catches_same_tick_dups(spark, tmp_path):
     without = {
         (r.new_doc_id, r.existing_doc_id)
         for r in incremental_minhash_dedup(
-            spark, batch, path, threshold=0.2, append=False, checkable=True
+            spark, batch, path, threshold=0.2, append=False
         ).collect()
     }
     with_wb = {
         (r.new_doc_id, r.existing_doc_id)
         for r in incremental_minhash_dedup(
             spark, batch, path, threshold=0.2, append=False,
-            checkable=True, within_batch=True,
+            within_batch=True,
         ).collect()
     }
     assert (11, 10) not in without  # store join alone misses same-tick
@@ -136,18 +137,18 @@ def test_sink_fn_mode_matches_default_mode(spark, sf_dir, fresh_dirs):
     docs = load_tables(spark, sf_dir, "documents")["documents"]
     corpus = docs.where(F.col("doc_id") < INCR_SPLIT)
     batch = docs.where(F.col("doc_id") >= INCR_SPLIT)
-    persist_minhash_store(corpus, store_a, checkable=True)
-    persist_minhash_store(corpus, store_b, checkable=True)
+    persist_minhash_store(corpus, store_a)
+    persist_minhash_store(corpus, store_b)
     default_pairs = _normalized(
         incremental_minhash_dedup(
             spark, batch, store_a, threshold=0.2, append=True,
-            checkable=True, within_batch=True,
+            within_batch=True,
         )
     )
     sink = stage + "_sink"
     ret = incremental_minhash_dedup(
         spark, batch, store_b, threshold=0.2, append=True,
-        checkable=True, within_batch=True,
+        within_batch=True,
         sink_fn=lambda pairs: pairs.write.mode("append").parquet(sink),
     )
     assert ret is None  # caller owns the sink in this mode
@@ -179,7 +180,7 @@ def test_failed_sink_leaves_store_unchanged(spark, sf_dir, fresh_dirs):
     docs = load_tables(spark, sf_dir, "documents")["documents"]
     corpus = docs.where(F.col("doc_id") < INCR_SPLIT)
     batch = docs.where(F.col("doc_id") >= INCR_SPLIT)
-    persist_minhash_store(corpus, store, checkable=True)
+    persist_minhash_store(corpus, store)
 
     def files():
         return {
@@ -200,23 +201,23 @@ def test_failed_sink_leaves_store_unchanged(spark, sf_dir, fresh_dirs):
     with pytest.raises(RuntimeError, match="sink failed"):
         incremental_minhash_dedup(
             spark, batch, store, threshold=0.2, append=True,
-            checkable=True, within_batch=True, sink_fn=failing_sink,
+            within_batch=True, sink_fn=failing_sink,
         )
     assert files() == before
 
     sink = stage + "_sink"
     incremental_minhash_dedup(
         spark, batch, store, threshold=0.2, append=True,
-        checkable=True, within_batch=True,
+        within_batch=True,
         sink_fn=lambda pairs: pairs.write.mode("append").parquet(sink),
     )
     retried = _normalized(spark.read.parquet(sink))
     store_b = fresh_dirs[1]
-    persist_minhash_store(corpus, store_b, checkable=True)
+    persist_minhash_store(corpus, store_b)
     fault_free = _normalized(
         incremental_minhash_dedup(
             spark, batch, store_b, threshold=0.2, append=False,
-            checkable=True, within_batch=True,
+            within_batch=True,
         )
     )
     assert retried == fault_free and retried
@@ -230,3 +231,43 @@ def test_registered_query_is_deterministic(spark, sf_dir):
     a = sorted(map(tuple, streaming_incremental_dedup(spark, sf_dir).collect()))
     b = sorted(map(tuple, streaming_incremental_dedup(spark, sf_dir).collect()))
     assert a == b and a
+
+
+def test_default_store_replays_in_duckdb(spark, sf_dir, tmp_path):
+    """``persist_minhash_store`` with no extra arguments writes exactly
+    the ``sig`` and ``bands`` relations DuckDB computes with
+    ``_bands_cte("poly")`` over the same rows, so every store-mediated
+    result is replayable by the incremental oracles."""
+    import duckdb
+
+    from ytspark.operators.dedup import _bands_cte
+
+    docs = load_tables(spark, sf_dir, "documents")["documents"]
+    corpus = docs.where(F.col("doc_id") < 80).select("doc_id", "text").union(
+        # a doc shorter than one shingle has no signature in either engine
+        spark.createDataFrame([(10_001, "two words")], "doc_id bigint, text string")
+    )
+    path = str(tmp_path / "store")
+    persist_minhash_store(corpus, path)
+
+    def spark_rows(sub, cols):
+        return sorted(
+            tuple(tuple(v) if isinstance(v, list) else v for v in r)
+            for r in spark.read.parquet(f"{path}/{sub}").select(*cols).collect()
+        )
+
+    con = duckdb.connect()
+    con.register("documents", corpus.toPandas())
+
+    def duck_rows(select):
+        return sorted(
+            tuple(tuple(v) if isinstance(v, list) else v for v in r)
+            for r in con.execute(f"WITH {_bands_cte('poly')} {select}").fetchall()
+        )
+
+    sigs = spark_rows("sigs", ["doc_id", "sig"])
+    assert sigs and 10_001 not in {r[0] for r in sigs}
+    assert sigs == duck_rows("SELECT doc_id, sig FROM sig")
+    assert spark_rows("bands", ["doc_id", "band_id", "band_hash"]) == duck_rows(
+        "SELECT doc_id, band_id, band_hash FROM bands"
+    )

@@ -74,20 +74,17 @@ STREAM_STATE_PARTITIONS = int(
 # every exchange into its own job + re-planning round — the
 # incremental-dedup tick ran 16 driver-sequenced jobs under AQE vs 3
 # without, all to "optimize" a few-thousand-row batch whose shuffle
-# width the _state_partitions pin already sizes. Off by default for
-# the duration of a stream run (restored afterwards — batch queries
-# keep session AQE); a deployment with big micro-batches turns it
-# back on with SPARK_GRAFT_STREAM_TICK_AQE=1.
-STREAM_TICK_AQE = os.environ.get("SPARK_GRAFT_STREAM_TICK_AQE", "0") == "1"
+# width the _state_partitions pin already sizes. Off for the duration
+# of a stream run, restored afterwards (batch queries keep session AQE).
 
 
 class _state_partitions:
     """Context manager: pin spark.sql.shuffle.partitions to the
-    streaming state width (and AQE to the stream-tick setting) for the
-    duration of a stream run, restoring the session's batch settings
-    afterwards (queries run sequentially, and the lazy batch
-    post-processing of a memory sink executes after restore, so batch
-    plans never see the streaming width)."""
+    streaming state width and turn AQE off for the duration of a
+    stream run, restoring the session's batch settings afterwards
+    (queries run sequentially, and the lazy batch post-processing of a
+    memory sink executes after restore, so batch plans never see the
+    streaming width)."""
 
     def __init__(self, spark: SparkSession):
         self.spark = spark
@@ -98,9 +95,7 @@ class _state_partitions:
         self.spark.conf.set(
             "spark.sql.shuffle.partitions", str(STREAM_STATE_PARTITIONS)
         )
-        self.spark.conf.set(
-            "spark.sql.adaptive.enabled", "true" if STREAM_TICK_AQE else "false"
-        )
+        self.spark.conf.set("spark.sql.adaptive.enabled", "false")
 
     def __exit__(self, *exc):
         self.spark.conf.set("spark.sql.shuffle.partitions", self.old)
@@ -395,14 +390,23 @@ def streaming_stateful_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame
     return spark.table(sink)
 
 
-from ytspark.operators.dedup import _streaming_incremental_oracle
+from ytspark.operators.dedup import INCR_SPLIT, INCR_THRESHOLD, _pairs_oracle
 
 
 @register(
     "streaming_incremental_dedup",
-    oracle=_streaming_incremental_oracle(),
+    # batch collapse: with within-batch pairing the accumulated pair set
+    # is independent of micro-batch slicing and equals every
+    # orientation-normalized pair involving at least one batch doc
+    # (corpus ids < INCR_SPLIT <= batch ids, so exactly doc_hi >= INCR_SPLIT)
+    oracle=_pairs_oracle(
+        "poly",
+        INCR_THRESHOLD,
+        ("doc_lo", "doc_hi"),
+        f"a.doc_id < b.doc_id AND b.doc_id >= {INCR_SPLIT}",
+    ),
     doc="The 100 TB ingest-cadence dedup shape END TO END in streaming "
-        "form: the corpus MinHash store bootstraps once (checkable "
+        "form: the corpus MinHash store bootstraps once (polynomial "
         "hash family), then a document stream (file source, one "
         "micro-batch per file) runs incremental_minhash_dedup inside "
         "foreachBatch — each tick signatures only its own batch, "
@@ -434,8 +438,6 @@ def streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     from ytspark.operators.dedup import (
-        INCR_SPLIT,
-        INCR_THRESHOLD,
         incremental_minhash_dedup,
         persist_minhash_store,
     )
@@ -458,7 +460,7 @@ def streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch = docs.where(F.col("doc_id") >= INCR_SPLIT)
     concurrent_jobs(
         lambda: persist_minhash_store(
-            docs.where(F.col("doc_id") < INCR_SPLIT), store, checkable=True
+            docs.where(F.col("doc_id") < INCR_SPLIT), store
         ),
         lambda: batch.repartitionByRange(4, "doc_id").write.parquet(stage),
     )
@@ -470,7 +472,7 @@ def streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         # two store appends run overlapped after it
         incremental_minhash_dedup(
             spark, batch_df, store, threshold=INCR_THRESHOLD, append=True,
-            checkable=True, within_batch=True,
+            within_batch=True,
             sink_fn=lambda pairs: pairs.select(
                 F.least("new_doc_id", "existing_doc_id").alias("doc_lo"),
                 F.greatest("new_doc_id", "existing_doc_id").alias("doc_hi"),
