@@ -217,23 +217,18 @@ def register(
 # across the remaining 15 families with certifiable backlog. Simulated
 # against check_priority_window before the swap: clean under rules
 # (a)+(b). Backlog after an all-pass round: 53.
-# Round 12 rotation (r11 VERDICT "What's missing" item 1), generated by
-# tools/rotate_window.py (deterministic; stamp in WINDOW_ROTATION.json):
-# with CORRECTNESS_r11 on record (50/50 pass) the PASS-counted backlog
-# is 54 — and ALL 54 are now oracle-backed, because this round
-# re-keyed the three hash-seeded rows-only MinHash/SimHash production
-# queries on the md5-derived portable_hash64 and gave them full replay
-# oracles (r11 missing-item 3), so for the first time every backlog
-# member can convert a window slot into a hash-certified driver pass.
-# The one repeat anchor is the flagship; the 49 FIRST-EVERS lead with
-# those three conversions (dedup is a verdict-named heavy family),
-# then the deterministic breadth-first round-robin (alphabetical
-# family order and names) across every family with certifiable
-# backlog. Backlog after an all-pass round: 5 — within one round of
-# zero. Simulated against check_priority_window before the swap:
-# clean under rules (a)+(b).
+# Round 14 rotation, generated by tools/rotate_window.py: the
+# never-driver-passed oracle-backed backlog is 6, all in the window
+# after the flagship; the remaining 43 slots are step-4 repeat passes
+# (already-certified names in registry order).
 _PRIORITY: tuple[str, ...] = (
     "mart_union_cast",  # repeat anchor: the flagship
+    "dedup_minhash_clusters_distributed",
+    "token_count_regex",
+    "token_oov_rate_eval",
+    "token_pmi_bigrams",
+    "token_zipf_slope",
+    "weighted_sample_per_source",
     "dedup_minhash_clusters",
     "dedup_minhash_lsh",
     "dedup_simhash",
@@ -277,12 +272,6 @@ _PRIORITY: tuple[str, ...] = (
     "twap_value_by_type_day",
     "lang_id_confusion_matrix",
     "user_activity_overlap_pairs",
-    "mixed_language_docs",
-    "ngram_novelty_curve",
-    "rake_keywords",
-    "source_vocab_overlap",
-    "stratified_sample_exact",
-    "term_burstiness_profile",
 )
 
 
