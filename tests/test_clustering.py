@@ -16,6 +16,11 @@ from ytspark.operators.clustering import (
     embedding_kmeans_assign,
     embedding_pq,
 )
+from ytspark.operators.similarity import (
+    IVF_TRAIN_CAP,
+    _sample_sql,
+    training_sample,
+)
 from ytspark.session import load_tables
 
 
@@ -71,3 +76,33 @@ def test_kmeans_plan_broadcasts_centroids(spark, sf_dir):
         .toString()
     )
     assert "BroadcastExchange" in plan
+
+
+def test_training_sample_replays_in_duckdb(spark, sf_dir, tmp_path):
+    """``training_sample`` returns exactly the rows, in order, of the
+    ``tr`` CTE every IVF/PQ/PCA oracle trains on: at sf0.001 (stride 1)
+    and on a corpus past IVF_TRAIN_CAP, where the Knuth stride drops
+    rows."""
+    import duckdb
+    import pandas as pd
+
+    n = 2 * IVF_TRAIN_CAP + 100
+    rng = np.random.default_rng(7)
+    big = str(tmp_path / "big.parquet")
+    pd.DataFrame(
+        {
+            "vec_id": rng.permutation(n).astype("int64"),
+            "label": 0,
+            "embedding": [list(r) for r in rng.random((n, 4), dtype="float32")],
+        }
+    ).to_parquet(big)
+    for path in (f"{sf_dir}/embeddings.parquet", big):
+        ids, mat = training_sample(spark.read.parquet(path))
+        con = duckdb.connect()
+        con.execute(f"CREATE VIEW embeddings AS SELECT * FROM '{path}'")
+        want = con.execute(
+            f"WITH {_sample_sql()} SELECT vec_id, v FROM tr ORDER BY rn"
+        ).fetchall()
+        assert ids.tolist() == [r[0] for r in want]
+        assert np.array_equal(mat, np.array([r[1] for r in want]))
+    assert len(ids) < n  # the stride really thinned the big corpus

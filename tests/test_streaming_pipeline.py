@@ -289,12 +289,21 @@ class TestStatePartitionScoping:
         from ytspark.queries import registry
         from ytspark.streaming.queries import STREAM_STATE_PARTITIONS
 
-        before = spark.conf.get("spark.sql.shuffle.partitions")
-        assert before != str(STREAM_STATE_PARTITIONS) or True
-        df = registry()["streaming_dedup_events"].fn(spark, sf_dir)
-        assert spark.conf.get("spark.sql.shuffle.partitions") == before
-        df.write.format("noop").mode("overwrite").save()
-        assert spark.conf.get("spark.sql.shuffle.partitions") == before
+        keys = ("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+        saved = {k: spark.conf.get(k) for k in keys}
+        # a batch session whose settings differ from the stream's pin
+        # (state width, AQE off), so a missing restore is visible
+        before = {keys[0]: str(STREAM_STATE_PARTITIONS + 1), keys[1]: "true"}
+        try:
+            for k, v in before.items():
+                spark.conf.set(k, v)
+            df = registry()["streaming_dedup_events"].fn(spark, sf_dir)
+            assert {k: spark.conf.get(k) for k in keys} == before
+            df.write.format("noop").mode("overwrite").save()
+            assert {k: spark.conf.get(k) for k in keys} == before
+        finally:
+            for k, v in saved.items():
+                spark.conf.set(k, v)
 
     def test_restores_on_failure(self, spark):
         from ytspark.streaming.queries import (
@@ -312,3 +321,32 @@ class TestStatePartitionScoping:
         except ValueError:
             pass
         assert spark.conf.get("spark.sql.shuffle.partitions") == before
+
+
+def test_repeat_calls_leave_no_temp_dirs(spark, sf_dir):
+    """The events stream's stage dir and schema_evolution_read's parquet
+    batches live in the per-process scratch dir: repeat calls reuse it
+    and create no new ``ytspark_stream_*`` or ``tmp*`` dirs."""
+    import tempfile
+
+    from ytspark.queries import registry
+    from ytspark.streaming.queries import _events_stream
+
+    def temp_dirs():
+        root = tempfile.gettempdir()
+        return {
+            d
+            for pat in ("ytspark_stream_*", "tmp*")
+            for d in glob.glob(os.path.join(root, pat))
+        }
+
+    evolve = registry()["schema_evolution_read"].fn
+
+    def run():
+        assert _events_stream(spark, sf_dir).isStreaming
+        return evolve(spark, sf_dir).collect()
+
+    first = run()
+    before = temp_dirs()
+    assert run() == run() == first
+    assert temp_dirs() == before

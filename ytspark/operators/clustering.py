@@ -1,16 +1,20 @@
 """Embedding clustering / compression operators: k-means cell
-assignment (cross-engine value-checkable) and product quantization.
+assignment (cross-engine value-checkable), product quantization and
+PCA.
 
-Complements the similarity module's IVF/LSH serving indexes: the same
-nearest-centroid kernel, but exposed as first-class clustering and
-compression operators with corpus-level accounting.
+Complements the similarity module's IVF/LSH serving indexes and shares
+its kernel set: PQ codebooks and PCA train on
+``similarity.training_sample`` (replayed in SQL by
+``similarity._sample_sql``), and ``pq_codes`` / ``_pq_sql`` are the one
+PQ encode step that ``embedding_pq`` and ``knn_cosine_ivf_pq`` both
+run.
 
-Scale shape shared by both: centroids/codebooks are tiny (K·dim
-floats) and BROADCAST; assignment is map-only against the embedding
-scan (no shuffle before the final small aggregate). Training samples
-are bounded deterministic hash-strided subsets — the driver never
-holds more than ``similarity.IVF_TRAIN_CAP`` vectors regardless of
-corpus size.
+Scale shape: centroids/codebooks are tiny (K·dim floats) and
+BROADCAST; assignment is map-only against the embedding scan (no
+shuffle before the final small aggregate). The training sample is a
+bounded deterministic hash-strided subset — the driver never holds
+more than ~``similarity.IVF_TRAIN_CAP`` vectors regardless of corpus
+size.
 """
 
 from __future__ import annotations
@@ -110,11 +114,29 @@ def _fold_d2(a, c):
     return acc
 
 
+def pq_codes(mat, books):
+    """PQ-encode the float64 rows ``mat`` against ``books`` (m, k,
+    dim//m): per subspace, the nearest code by left-fold squared
+    distance (ties to the lowest code, ORDER BY d2, code in the SQL
+    replay) and that squared error. Returns two (n_rows, m) arrays,
+    codes (int64) and errors."""
+    import numpy as np
+
+    m, _, sub = books.shape
+    codes = np.empty((len(mat), m), dtype="int64")
+    errs = np.empty((len(mat), m))
+    for s in range(m):
+        d2 = _fold_d2(mat[:, s * sub : (s + 1) * sub], books[s])
+        codes[:, s] = d2.argmin(axis=1)
+        errs[:, s] = d2[np.arange(len(mat)), codes[:, s]]
+    return codes, errs
+
+
 def build_pq_codebooks(emb: DataFrame, m: int = PQ_SUBSPACES, k: int = PQ_CODES):
-    """Deterministic per-subspace codebooks: bounded hash-strided
-    sample (same discipline as ``similarity.build_ivf_centroids`` — the
-    driver holds ~IVF_TRAIN_CAP vectors max), evenly-strided seeds, one
-    Lloyd refinement per subspace. Returns ndarray (m, k, dim//m).
+    """Deterministic per-subspace codebooks trained on
+    ``similarity.training_sample`` (the driver holds ~IVF_TRAIN_CAP
+    vectors max): evenly-strided seeds, one Lloyd refinement per
+    subspace. Returns ndarray (m, k, dim//m).
 
     Cross-engine reproducible by construction (round 4): Knuth-strided
     sample, vec_id row order, left-fold distances, argmin ties to the
@@ -123,16 +145,9 @@ def build_pq_codebooks(emb: DataFrame, m: int = PQ_SUBSPACES, k: int = PQ_CODES)
     like knn_cosine_ivf."""
     import numpy as np
 
-    from ytspark.operators.similarity import IVF_TRAIN_CAP
-    from ytspark.operators.text import knuth_hash_col
+    from ytspark.operators.similarity import training_sample
 
-    n = emb.count()
-    stride = max(1, n // IVF_TRAIN_CAP)
-    train = emb.where(
-        F.pmod(knuth_hash_col(F.col("vec_id")), F.lit(stride)) == 0
-    ).select("vec_id", "embedding")
-    pdf = train.toPandas().sort_values("vec_id").reset_index(drop=True)
-    mat = np.stack(pdf["embedding"].to_numpy()).astype("float64")
+    _, mat = training_sample(emb)
     dim = mat.shape[1]
     sub = dim // m
     books = np.empty((m, k, sub))
@@ -155,18 +170,15 @@ def build_pq_codebooks(emb: DataFrame, m: int = PQ_SUBSPACES, k: int = PQ_CODES)
     return books
 
 
-def _pq_oracle() -> str:
-    """Chained-CTE DuckDB replay of build_pq_codebooks + the encode
-    kernel — the knn_cosine_ivf discipline applied per subspace:
-    Knuth-strided sample, vec_id-ordered evenly-strided seeds, one
-    Lloyd step with vec_id-ordered member folds, then full-corpus
-    encoding; every distance is a strict left fold and every argmin
-    ranks (d2, code)."""
-    from ytspark.operators.similarity import IVF_TRAIN_CAP
-    from ytspark.operators.text import knuth_hash_sql
-
+def _pq_sql() -> str:
+    """CTEs replaying ``build_pq_codebooks`` + ``pq_codes`` over
+    ``similarity._sample_sql``'s ``e``/``tr``: per subspace,
+    vec_id-ordered evenly-strided seeds, one Lloyd step with
+    vec_id-ordered member folds (``cbook(s, code, cv)``), then
+    full-corpus encoding ``pq_enc(s, vec_id, code, sq_err)``. Every
+    distance is a strict left fold and every argmin ranks (d2, code)."""
     sub = 64 // PQ_SUBSPACES
-    knuth = knuth_hash_sql("vec_id")
+    ss = f"GREATEST(1, nt // {PQ_CODES})"
 
     def d2(bv: str, cv: str) -> str:
         return (
@@ -175,77 +187,75 @@ def _pq_oracle() -> str:
             " (a, x) -> a + x)"
         )
 
-    ss = f"GREATEST(1, nt // {PQ_CODES})"
-    return f"""
-WITH e AS (
-  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
+    return f"""pq_sub AS (SELECT UNNEST(RANGE(0, {PQ_SUBSPACES})) AS s),
+pq_tblocks AS (
+  SELECT tr.vec_id, tr.rn, tr.nt, pq_sub.s,
+         tr.v[pq_sub.s * {sub} + 1 : pq_sub.s * {sub} + {sub}] AS bv
+  FROM tr CROSS JOIN pq_sub
 ),
-p AS (
-  SELECT GREATEST(1, COUNT(*) // {IVF_TRAIN_CAP}) AS stride FROM e
-),
-tr AS (
-  SELECT vec_id, v, ROW_NUMBER() OVER (ORDER BY vec_id) AS rn,
-         COUNT(*) OVER () AS nt
-  FROM e WHERE ({knuth}) % (SELECT stride FROM p) = 0
-),
-sub AS (SELECT UNNEST(RANGE(0, {PQ_SUBSPACES})) AS s),
-tblocks AS (
-  SELECT tr.vec_id, tr.rn, tr.nt, sub.s,
-         tr.v[sub.s * {sub} + 1 : sub.s * {sub} + {sub}] AS bv
-  FROM tr CROSS JOIN sub
-),
-seeds AS (
+pq_seeds AS (
   SELECT s, CAST((rn - 1) // {ss} AS INT) AS code, bv
-  FROM tblocks
+  FROM pq_tblocks
   WHERE (rn - 1) % {ss} = 0 AND (rn - 1) // {ss} < {PQ_CODES}
 ),
-best AS (
+pq_best AS (
   SELECT s, vec_id, code FROM (
     SELECT t.s, t.vec_id, c.code,
            ROW_NUMBER() OVER (PARTITION BY t.s, t.vec_id
                               ORDER BY {d2("t.bv", "c.bv")} ASC,
                                        c.code) AS rk
-    FROM tblocks t JOIN seeds c ON c.s = t.s
+    FROM pq_tblocks t JOIN pq_seeds c ON c.s = t.s
   ) WHERE rk = 1
 ),
-dimsum AS (
+pq_dimsum AS (
   SELECT b.s, b.code, d.i AS dim,
          LIST_REDUCE(LIST(t.bv[d.i] ORDER BY t.vec_id), (a, x) -> a + x)
            / COUNT(*) AS mu
-  FROM best b
-  JOIN tblocks t ON t.s = b.s AND t.vec_id = b.vec_id
+  FROM pq_best b
+  JOIN pq_tblocks t ON t.s = b.s AND t.vec_id = b.vec_id
   CROSS JOIN (SELECT UNNEST(RANGE(1, {sub + 1})) AS i) d
   GROUP BY b.s, b.code, d.i
 ),
-mvec AS (
-  SELECT s, code, LIST(mu ORDER BY dim) AS mv FROM dimsum GROUP BY s, code
+pq_mvec AS (
+  SELECT s, code, LIST(mu ORDER BY dim) AS mv
+  FROM pq_dimsum GROUP BY s, code
 ),
 cbook AS (
   -- empty codes keep their seed (the numpy side's if counts[c] guard)
   SELECT sd.s, sd.code, COALESCE(r.mv, sd.bv) AS cv
-  FROM seeds sd LEFT JOIN mvec r ON r.s = sd.s AND r.code = sd.code
+  FROM pq_seeds sd LEFT JOIN pq_mvec r ON r.s = sd.s AND r.code = sd.code
 ),
-eblocks AS (
-  SELECT e.vec_id, sub.s,
-         e.v[sub.s * {sub} + 1 : sub.s * {sub} + {sub}] AS bv
-  FROM e CROSS JOIN sub
+pq_eblocks AS (
+  SELECT e.vec_id, pq_sub.s,
+         e.v[pq_sub.s * {sub} + 1 : pq_sub.s * {sub} + {sub}] AS bv
+  FROM e CROSS JOIN pq_sub
 ),
-enc AS (
+pq_enc AS (
   SELECT s, vec_id, code, sq_err FROM (
-    SELECT t.s, t.vec_id, c.code,
-           {d2("t.bv", "c.cv")} AS sq_err,
-           ROW_NUMBER() OVER (PARTITION BY t.s, t.vec_id
-                              ORDER BY {d2("t.bv", "c.cv")} ASC,
-                                       c.code) AS rk
-    FROM eblocks t JOIN cbook c ON c.s = t.s
+    SELECT *, ROW_NUMBER() OVER (PARTITION BY s, vec_id
+                                 ORDER BY sq_err ASC, code) AS rk
+    FROM (
+      SELECT t.s, t.vec_id, c.code, {d2("t.bv", "c.cv")} AS sq_err
+      FROM pq_eblocks t JOIN cbook c ON c.s = t.s
+    )
   ) WHERE rk = 1
-)
+)"""
+
+
+def _pq_oracle() -> str:
+    """Chained-CTE DuckDB replay of build_pq_codebooks + the encode
+    kernel (``_pq_sql``), closed with the per-subspace accounting."""
+    from ytspark.operators.similarity import _sample_sql
+
+    return f"""
+WITH {_sample_sql()},
+{_pq_sql()}
 SELECT CAST(s AS INTEGER) AS subspace,
        COUNT(*) AS n_vectors,
        COUNT(DISTINCT code) AS codes_used,
        ROUND(CAST(SUM(CAST(ROUND(sq_err, 9) AS DECIMAL(28,12))) AS DOUBLE)
              / COUNT(*), 6) AS avg_sq_err
-FROM enc GROUP BY s
+FROM pq_enc GROUP BY s
 """
 
 
@@ -274,32 +284,23 @@ def embedding_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
     emb = load_tables(spark, sf_dir, "embeddings")["embeddings"]
-    books = build_pq_codebooks(emb)
-    m, k, sub = books.shape
-    bbooks = spark.sparkContext.broadcast(books)
+    bbooks = spark.sparkContext.broadcast(build_pq_codebooks(emb))
 
     def encode(batches):
         import numpy as np
 
-        bk = bbooks.value
         for pdf in batches:
             mat = np.stack(pdf["embedding"].to_numpy()).astype("float64")
-            out = []
-            for s in range(m):
-                block = mat[:, s * sub : (s + 1) * sub]
-                d2 = _fold_d2(block, bk[s])
-                codes = d2.argmin(axis=1)
-                err = d2[np.arange(len(block)), codes]
-                out.append(
+            codes, errs = pq_codes(mat, bbooks.value)
+            yield pd.concat(
+                [
                     pd.DataFrame(
-                        {
-                            "subspace": s,
-                            "code": codes.astype("int64"),
-                            "sq_err": err,
-                        }
+                        {"subspace": s, "code": codes[:, s], "sq_err": errs[:, s]}
                     )
-                )
-            yield pd.concat(out, ignore_index=True)
+                    for s in range(codes.shape[1])
+                ],
+                ignore_index=True,
+            )
 
     encoded = emb.mapInPandas(
         encode, schema="subspace int, code long, sq_err double"
@@ -325,8 +326,8 @@ PCA_DIM = 64
 
 
 def _pca_oracle() -> str:
-    """Chained-CTE DuckDB replay of the full PCA pipeline: the
-    Knuth-strided bounded training sample, the vec_id-ordered per-dim
+    """Chained-CTE DuckDB replay of the full PCA pipeline: the shared
+    training sample (``similarity._sample_sql``), the vec_id-ordered per-dim
     mean fold, PCA_ITERS power-method iterations (each = one fold over
     dims per row, one fold over rows per dim, one L2 normalize), then
     the corpus-wide projection and per-label stats. Every float op is
@@ -334,24 +335,14 @@ def _pca_oracle() -> str:
     numpy adds in ``_pca_train``), so the trained component — and the
     projections through it — are bit-exact and hash-certified, the
     discipline knn_cosine_ivf / embedding_pq proved."""
-    from ytspark.operators.similarity import IVF_TRAIN_CAP
-    from ytspark.operators.text import knuth_hash_sql
+    from ytspark.operators.similarity import _sample_sql
 
-    knuth = knuth_hash_sql("vec_id")
     d = PCA_DIM
     dims = f"(SELECT UNNEST(RANGE(1, {d + 1})) AS i)"
     parts = [
         f"""
-WITH e AS (
-  SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings
-),
-p AS (
-  SELECT GREATEST(1, COUNT(*) // {IVF_TRAIN_CAP}) AS stride FROM e
-),
-t AS (
-  SELECT vec_id, v, COUNT(*) OVER () AS nt
-  FROM e WHERE ({knuth}) % (SELECT stride FROM p) = 0
-),
+WITH {_sample_sql()},
+t AS (SELECT vec_id, v, nt FROM tr),
 dmu AS (
   SELECT d.i AS dim,
          LIST_REDUCE(LIST(t.v[d.i] ORDER BY t.vec_id), (a, x) -> a + x)
@@ -403,7 +394,7 @@ SELECT label,
          AS eigval
 FROM proj
 GROUP BY label""")
-    return ",".join(parts).replace("WITH e AS", "WITH e AS", 1)
+    return ",".join(parts)
 
 
 def _pca_train(emb: "DataFrame"):
@@ -413,18 +404,9 @@ def _pca_train(emb: "DataFrame"):
     the same order as the SQL oracle's LIST_REDUCE calls."""
     import numpy as np
 
-    from ytspark.operators.similarity import IVF_TRAIN_CAP
-    from ytspark.operators.text import knuth_hash_col
+    from ytspark.operators.similarity import training_sample
 
-    n = emb.count()
-    stride = max(1, n // IVF_TRAIN_CAP)
-    pdf = (
-        emb.where(F.pmod(knuth_hash_col(F.col("vec_id")), F.lit(stride)) == 0)
-        .select("vec_id", "embedding")
-        .orderBy("vec_id")
-        .toPandas()  # bounded: <= ~2x IVF_TRAIN_CAP rows by stride
-    )
-    X = np.array([np.asarray(r, dtype=np.float64) for r in pdf.embedding])
+    _, X = training_sample(emb)
     nt = X.shape[0]
     acc = X[0].copy()
     for i in range(1, nt):

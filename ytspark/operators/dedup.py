@@ -1314,37 +1314,20 @@ def emb_block_count(
 
 
 def _emb_lsh_oracle() -> str:
-    """Inlined-planes oracle (same pattern as knn_cosine_lsh): DuckDB
-    recomputes the sign-pattern buckets from the LCG plane constants
-    and the within-bucket pair scores. The Spark side scores with a
-    BLAS GEMM whose accumulation order differs from a sequential fold
-    at the ulp level — absorbed by the shared 6 dp rounding before
-    both the threshold compare and the hash."""
-    from ytspark.operators.similarity import hyperplane
+    """Inlined-planes oracle (the knn_cosine_lsh bucket CTEs, first
+    N_DEDUP_PLANES planes): DuckDB recomputes the sign-pattern buckets
+    from the LCG plane constants and the within-bucket pair scores.
+    The Spark side scores with a BLAS GEMM whose accumulation order
+    differs from a sequential fold at the ulp level — absorbed by the
+    shared 6 dp rounding before both the threshold compare and the
+    hash."""
+    from ytspark.operators.similarity import _cos_sql, _lsh_buckets_sql
 
-    rows = ",\n    ".join(
-        f"({1 << s}, {hyperplane(64, seed=s + 1)!r}::DOUBLE[])"
-        for s in range(N_DEDUP_PLANES)
-    )
     return f"""
-WITH planes(bit, plane) AS (VALUES
-    {rows}
-),
-corpus AS (
-  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-),
-buckets AS (
-  SELECT c.vec_id, c.v,
-         CAST(SUM(CASE WHEN LIST_DOT_PRODUCT(c.v, p.plane) > 0
-                       THEN p.bit ELSE 0 END) AS BIGINT) AS bucket
-  FROM corpus c CROSS JOIN planes p
-  GROUP BY c.vec_id, c.v
-)
+WITH {_lsh_buckets_sql(1, N_DEDUP_PLANES)}
 SELECT * FROM (
   SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-         ROUND(LIST_DOT_PRODUCT(a.v, b.v)
-               / (SQRT(LIST_DOT_PRODUCT(a.v, a.v))
-                  * SQRT(LIST_DOT_PRODUCT(b.v, b.v))), 6) AS cos_sim
+         {_cos_sql("a.v", "b.v")} AS cos_sim
   FROM buckets a JOIN buckets b
     ON a.bucket = b.bucket AND a.vec_id < b.vec_id
 ) WHERE cos_sim >= 0.45
@@ -1371,11 +1354,11 @@ def dedup_embedding_cosine_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    from ytspark.operators.similarity import as_double, bucket_id, hyperplane
+    from ytspark.operators.similarity import as_double, bucket_id, lsh_planes
 
     emb = load_tables(spark, sf_dir, "embeddings")["embeddings"]
     threshold = 0.45
-    planes = [hyperplane(64, seed=s + 1) for s in range(N_DEDUP_PLANES)]
+    planes = lsh_planes(0, N_DEDUP_PLANES)
     bucketed = emb.select(
         "vec_id",
         "embedding",

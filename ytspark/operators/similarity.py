@@ -1,6 +1,24 @@
 """Similarity search over the ``embeddings`` table (64-dim float
-vectors): brute-force cosine top-k as the exact baseline, plus a
-random-hyperplane-LSH bucketed variant as the scale path.
+vectors): brute-force cosine top-k as the exact baseline, plus the
+approximate candidate generators (hyperplane LSH, IVF, IVF-PQ) that
+each end in the same exact top-k refine.
+
+One kernel set serves every ANN pipeline here and in ``clustering``;
+each decision lives in one Spark function and one SQL generator:
+
+- training sample: ``training_sample`` / ``_sample_sql`` (bounded
+  Knuth-strided, vec_id order) feeds IVF centroids, PQ codebooks and
+  PCA;
+- IVF cells: ``_nearest_cells`` (left-fold scores, ties to the lower
+  cell), ``_write_ivf_cells`` and ``_read_centroids`` / the
+  ``_ivf_sql`` CTEs;
+- LSH planes and buckets: ``lsh_planes`` + ``bucket_id`` /
+  ``_lsh_buckets_sql`` (table 0 is the single-table set);
+- exact refine: ``analytics.top_k_per_group`` (score desc, id asc) /
+  ``_topk_sql`` over the 6-dp ``_cos_sql`` cosine.
+
+The SQL generators share only with each other: they are the reference
+the Spark side is compared against.
 
 Scale notes:
 
@@ -27,6 +45,7 @@ import os
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ytspark.analytics import top_k_per_group
 from ytspark.plans.scale import finish
 from ytspark.queries import register
 from ytspark.session import load_tables
@@ -57,6 +76,30 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
+def _cos_sql(a: str, b: str) -> str:
+    """DuckDB twin of ``round(cosine(a, b), 6)``."""
+    return (
+        f"ROUND(LIST_DOT_PRODUCT({a}, {b})\n"
+        f"       / (SQRT(LIST_DOT_PRODUCT({a}, {a}))\n"
+        f"          * SQRT(LIST_DOT_PRODUCT({b}, {b}))), 6)"
+    )
+
+
+def _topk_sql(
+    src: str,
+    cols: str = "query_id, neighbor_id, cos_sim",
+    score: str = "cos_sim",
+    k: int = TOP_K,
+) -> str:
+    """Per-query top-k of ``src`` by ``score`` desc, ``neighbor_id``
+    asc: the SQL side of ``top_k_per_group``."""
+    return f"""SELECT {cols} FROM (
+  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
+                               ORDER BY {score} DESC, neighbor_id) AS rk
+  FROM {src}
+) WHERE rk <= {k}"""
+
+
 @register(
     "knn_cosine_bruteforce",
     oracle=f"""
@@ -66,18 +109,11 @@ WITH q AS (
 ),
 scored AS (
   SELECT q.query_id, e.vec_id AS neighbor_id,
-         ROUND(LIST_DOT_PRODUCT(q.qv, e.embedding::DOUBLE[])
-               / (SQRT(LIST_DOT_PRODUCT(q.qv, q.qv))
-                  * SQRT(LIST_DOT_PRODUCT(e.embedding::DOUBLE[], e.embedding::DOUBLE[]))), 6)
-           AS cos_sim
+         {_cos_sql("q.qv", "e.embedding::DOUBLE[]")} AS cos_sim
   FROM q, embeddings e
   WHERE e.vec_id <> q.query_id
 )
-SELECT query_id, neighbor_id, cos_sim FROM (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                               ORDER BY cos_sim DESC, neighbor_id) AS rk
-  FROM scored
-) WHERE rk <= {TOP_K}
+{_topk_sql("scored")}
 """,
     doc="Exact cosine top-k: broadcast query set × streamed corpus, "
         "zip_with/aggregate dot products, per-query rank window.",
@@ -89,23 +125,15 @@ def knn_cosine_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = corpus.where(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
     )
-    from pyspark.sql import Window
-
-    scored = (
-        corpus.join(F.broadcast(queries), F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(cosine(F.col("qv"), F.col("v")), 6).alias("cos_sim"),
-        )
+    scored = corpus.join(
+        F.broadcast(queries), F.col("vec_id") != F.col("query_id")
+    ).select(
+        "query_id",
+        F.col("vec_id").alias("neighbor_id"),
+        F.round(cosine(F.col("qv"), F.col("v")), 6).alias("cos_sim"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= TOP_K)
-        .select("query_id", "neighbor_id", "cos_sim")
+    return top_k_per_group(
+        scored, "query_id", "cos_sim", TOP_K, ("neighbor_id",)
     )
 
 
@@ -120,6 +148,14 @@ def hyperplane(dim: int, seed: int) -> list[float]:
     return vals
 
 
+def lsh_planes(
+    table: int = 0, n_planes: int = N_HYPERPLANES
+) -> list[list[float]]:
+    """The 64-dim hyperplanes of LSH table ``table``. Table 0 is the
+    single-table set; table t seeds its planes at 1009*t + s + 1."""
+    return [hyperplane(64, seed=1009 * table + s + 1) for s in range(n_planes)]
+
+
 def bucket_id(vec: Column, planes: list[list[float]]) -> Column:
     """Sign-pattern bucket: bit i = 1 iff dot(vec, plane_i) > 0."""
     bits = None
@@ -130,47 +166,49 @@ def bucket_id(vec: Column, planes: list[list[float]]) -> Column:
     return bits
 
 
-def _lsh_oracle() -> str:
-    """Full-SQL oracle for knn_cosine_lsh: the hyperplanes are a pure
-    deterministic LCG, so their 8x64 double constants inline as SQL
+def _lsh_buckets_sql(n_tables: int = 1, n_planes: int = N_HYPERPLANES) -> str:
+    """CTEs ``planes``, ``corpus`` and ``buckets(table_id, vec_id, v,
+    bucket)`` for ``n_tables`` LSH tables of ``n_planes`` planes each
+    (table t seeds its planes at 1009*t + s + 1). The hyperplanes are
+    a pure deterministic LCG, so their double constants inline as SQL
     literals (repr round-trips to the identical double) and DuckDB
-    recomputes the same sign-pattern buckets, candidates, and scores.
-    Sign decisions are thresholds, not rounded values — safe because
-    the dataset is fixed per gate run and no |dot| sits within
-    accumulation-order ulp of zero (verified by the hash match
-    itself)."""
+    recomputes the same sign-pattern buckets. Sign decisions are
+    thresholds, not rounded values — safe because the dataset is fixed
+    per gate run and no |dot| sits within accumulation-order ulp of
+    zero (verified by the hash match itself)."""
     rows = ",\n    ".join(
-        f"({1 << s}, {hyperplane(64, seed=s + 1)!r}::DOUBLE[])"
-        for s in range(N_HYPERPLANES)
+        f"({t}, {1 << s}, {hyperplane(64, seed=1009 * t + s + 1)!r}::DOUBLE[])"
+        for t in range(n_tables)
+        for s in range(n_planes)
     )
-    return f"""
-WITH planes(bit, plane) AS (VALUES
+    return f"""planes(table_id, bit, plane) AS (VALUES
     {rows}
 ),
 corpus AS (
   SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
 ),
 buckets AS (
-  SELECT c.vec_id, c.v,
+  SELECT p.table_id, c.vec_id, c.v,
          CAST(SUM(CASE WHEN LIST_DOT_PRODUCT(c.v, p.plane) > 0
                        THEN p.bit ELSE 0 END) AS BIGINT) AS bucket
   FROM corpus c CROSS JOIN planes p
-  GROUP BY c.vec_id, c.v
-),
+  GROUP BY p.table_id, c.vec_id, c.v
+)"""
+
+
+def _lsh_oracle() -> str:
+    """Full-SQL oracle for knn_cosine_lsh: DuckDB recomputes the
+    sign-pattern buckets, candidates, and scores."""
+    return f"""
+WITH {_lsh_buckets_sql()},
 scored AS (
   SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,
-         ROUND(LIST_DOT_PRODUCT(q.v, e.v)
-               / (SQRT(LIST_DOT_PRODUCT(q.v, q.v))
-                  * SQRT(LIST_DOT_PRODUCT(e.v, e.v))), 6) AS cos_sim
+         {_cos_sql("q.v", "e.v")} AS cos_sim
   FROM buckets q JOIN buckets e
     ON q.bucket = e.bucket AND e.vec_id <> q.vec_id
   WHERE q.vec_id < {N_QUERIES}
 )
-SELECT query_id, neighbor_id, cos_sim FROM (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                               ORDER BY cos_sim DESC, neighbor_id) AS rk
-  FROM scored
-) WHERE rk <= {TOP_K}
+{_topk_sql("scored")}
 """
 
 
@@ -188,39 +226,26 @@ SELECT query_id, neighbor_id, cos_sim FROM (
 )
 def knn_cosine_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_tables(spark, sf_dir, "embeddings")["embeddings"]
-    dim = 64
-    planes = [hyperplane(dim, seed=s + 1) for s in range(N_HYPERPLANES)]
     corpus = emb.select(
         "vec_id", as_double(F.col("embedding")).alias("v")
-    ).withColumn("bucket", bucket_id(F.col("v"), planes))
+    ).withColumn("bucket", bucket_id(F.col("v"), lsh_planes()))
     queries = corpus.where(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("v").alias("qv"),
         F.col("bucket").alias("qbucket"),
     )
-    from pyspark.sql import Window
-
-    scored = (
-        corpus.join(
-            F.broadcast(queries),
-            (F.col("bucket") == F.col("qbucket"))
-            & (F.col("vec_id") != F.col("query_id")),
-        )
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(cosine(F.col("qv"), F.col("v")), 6).alias("cos_sim"),
-        )
+    scored = corpus.join(
+        F.broadcast(queries),
+        (F.col("bucket") == F.col("qbucket"))
+        & (F.col("vec_id") != F.col("query_id")),
+    ).select(
+        "query_id",
+        F.col("vec_id").alias("neighbor_id"),
+        F.round(cosine(F.col("qv"), F.col("v")), 6).alias("cos_sim"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= TOP_K)
-        .select("query_id", "neighbor_id", "cos_sim")
-        .orderBy("query_id", "cos_sim", "neighbor_id")
-    )
+    return top_k_per_group(
+        scored, "query_id", "cos_sim", TOP_K, ("neighbor_id",)
+    ).orderBy("query_id", "cos_sim", "neighbor_id")
 
 
 N_IVF_CELLS = 16
@@ -228,33 +253,36 @@ N_PROBE = 4
 IVF_TRAIN_CAP = 4096  # max vectors collected to the driver for training
 
 
-def _ivf_oracle() -> str:
-    """Chained-CTE DuckDB replay of the ENTIRE IVF pipeline —
-    build_ivf_centroids (Knuth-strided bounded sample, vec_id-ordered
-    evenly-strided seeds, one Lloyd step with vec_id-ordered member
-    folds), persist_ivf_index's nearest-cell assignment, and
-    knn_from_ivf_index's probe + score serving. Every float op is a
-    strict left fold in both engines (LIST_DOT_PRODUCT / LIST_REDUCE
-    here, _fold_norms/_fold_scores in numpy, zip_with+aggregate in
-    Spark), every argmax ranks (score DESC, cell) — so the replay is
-    bit-exact and the driver hash-certifies the trained index itself,
-    the discipline embedding_kmeans_assign proved."""
+def _sample_sql() -> str:
+    """CTEs ``e`` (the corpus as doubles), ``p`` (the stride) and
+    ``tr(vec_id, v, rn, nt)``: the SQL replay of ``training_sample``,
+    the one training sample the IVF, PQ and PCA oracles read."""
     from ytspark.operators.text import knuth_hash_sql
 
-    knuth = knuth_hash_sql("vec_id")
-    return f"""
-WITH e AS (
-  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
+    return f"""e AS (
+  SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings
 ),
 p AS (
   SELECT GREATEST(1, COUNT(*) // {IVF_TRAIN_CAP}) AS stride FROM e
 ),
-tru AS (
-  SELECT vec_id,
-         LIST_TRANSFORM(v, x -> x / SQRT(LIST_DOT_PRODUCT(v, v))) AS uv,
-         ROW_NUMBER() OVER (ORDER BY vec_id) AS rn,
+tr AS (
+  SELECT vec_id, v, ROW_NUMBER() OVER (ORDER BY vec_id) AS rn,
          COUNT(*) OVER () AS nt
-  FROM e WHERE ({knuth}) % (SELECT stride FROM p) = 0
+  FROM e WHERE ({knuth_hash_sql("vec_id")}) % (SELECT stride FROM p) = 0
+)"""
+
+
+def _ivf_sql() -> str:
+    """CTEs replaying ``build_ivf_centroids`` over ``tr`` (vec_id-ordered
+    evenly-strided seeds, one Lloyd step with vec_id-ordered member
+    folds) into ``cents(cell, cv)``, the unit corpus ``cu``, the
+    nearest-cell assignment ``corpus_cell(vec_id, v, cell)`` and
+    ``probes(query_id, qv, probe_cell)``, each query's N_PROBE nearest
+    cells ranked (score DESC, cell). Needs ``_sample_sql``'s CTEs."""
+    return f"""tru AS (
+  SELECT vec_id, rn, nt,
+         LIST_TRANSFORM(v, x -> x / SQRT(LIST_DOT_PRODUCT(v, v))) AS uv
+  FROM tr
 ),
 seeds AS (
   SELECT CAST((rn - 1) // GREATEST(1, nt // {N_IVF_CELLS}) AS INT) AS cell, uv
@@ -314,22 +342,29 @@ probes AS (
     FROM cu CROSS JOIN cents c
     WHERE cu.vec_id < {N_QUERIES}
   ) WHERE rk <= {N_PROBE}
-),
+)"""
+
+
+def _ivf_oracle() -> str:
+    """Chained-CTE DuckDB replay of the ENTIRE IVF pipeline —
+    build_ivf_centroids, persist_ivf_index's nearest-cell assignment,
+    and knn_from_ivf_index's probe + score serving. Every float op is
+    a strict left fold in both engines (LIST_DOT_PRODUCT / LIST_REDUCE
+    here, _fold_norms/_fold_scores in numpy, zip_with+aggregate in
+    Spark), every argmax ranks (score DESC, cell) — so the replay is
+    bit-exact and the driver hash-certifies the trained index itself,
+    the discipline embedding_kmeans_assign proved."""
+    return f"""
+WITH {_sample_sql()},
+{_ivf_sql()},
 scored AS (
   SELECT p.query_id, cc.vec_id AS neighbor_id,
-         ROUND(LIST_DOT_PRODUCT(p.qv, cc.v)
-               / (SQRT(LIST_DOT_PRODUCT(p.qv, p.qv))
-                  * SQRT(LIST_DOT_PRODUCT(cc.v, cc.v))), 6) AS cos_sim
+         {_cos_sql("p.qv", "cc.v")} AS cos_sim
   FROM probes p
   JOIN corpus_cell cc
     ON cc.cell = p.probe_cell AND cc.vec_id <> p.query_id
 )
-SELECT query_id, neighbor_id, cos_sim FROM (
-  SELECT query_id, neighbor_id, cos_sim,
-         ROW_NUMBER() OVER (PARTITION BY query_id
-                            ORDER BY cos_sim DESC, neighbor_id) AS rk
-  FROM scored
-) WHERE rk <= {TOP_K}
+{_topk_sql("scored")}
 """
 
 
@@ -479,40 +514,17 @@ def _multitable_oracle() -> str:
     """Inlined-planes oracle for the 4-table LSH (same determinism
     argument as ``_lsh_oracle``); DISTINCT collapses multi-table hits
     exactly like the Spark side's groupBy/first."""
-    rows = ",\n    ".join(
-        f"({t}, {1 << s}, {hyperplane(64, seed=1009 * t + s + 1)!r}::DOUBLE[])"
-        for t in range(N_LSH_TABLES)
-        for s in range(N_HYPERPLANES)
-    )
     return f"""
-WITH planes(table_id, bit, plane) AS (VALUES
-    {rows}
-),
-corpus AS (
-  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-),
-buckets AS (
-  SELECT p.table_id, c.vec_id, c.v,
-         CAST(SUM(CASE WHEN LIST_DOT_PRODUCT(c.v, p.plane) > 0
-                       THEN p.bit ELSE 0 END) AS BIGINT) AS bucket
-  FROM corpus c CROSS JOIN planes p
-  GROUP BY p.table_id, c.vec_id, c.v
-),
+WITH {_lsh_buckets_sql(N_LSH_TABLES)},
 cand AS (
   SELECT DISTINCT q.vec_id AS query_id, e.vec_id AS neighbor_id,
-         ROUND(LIST_DOT_PRODUCT(q.v, e.v)
-               / (SQRT(LIST_DOT_PRODUCT(q.v, q.v))
-                  * SQRT(LIST_DOT_PRODUCT(e.v, e.v))), 6) AS cos_sim
+         {_cos_sql("q.v", "e.v")} AS cos_sim
   FROM buckets q
   JOIN buckets e ON q.table_id = e.table_id AND q.bucket = e.bucket
                AND e.vec_id <> q.vec_id
   WHERE q.vec_id < {N_QUERIES}
 )
-SELECT query_id, neighbor_id, cos_sim FROM (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                               ORDER BY cos_sim DESC, neighbor_id) AS rk
-  FROM cand
-) WHERE rk <= {TOP_K}
+{_topk_sql("cand")}
 """
 
 
@@ -530,14 +542,7 @@ SELECT query_id, neighbor_id, cos_sim FROM (
     tags=("similarity", "knn", "lsh", "multitable"),
 )
 def knn_cosine_lsh_multitable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     emb = load_tables(spark, sf_dir, "embeddings")["embeddings"]
-    dim = 64
-    tables = [
-        [hyperplane(dim, seed=1009 * t + s + 1) for s in range(N_HYPERPLANES)]
-        for t in range(N_LSH_TABLES)
-    ]
     base = emb.select("vec_id", as_double(F.col("embedding")).alias("v"))
     # one row per (vector, table): explode the per-table bucket ids
     buckets = base.select(
@@ -548,7 +553,7 @@ def knn_cosine_lsh_multitable(spark: SparkSession, sf_dir: str) -> DataFrame:
                 *[
                     F.struct(
                         F.lit(t).alias("table_id"),
-                        bucket_id(F.col("v"), tables[t]).alias("bucket"),
+                        bucket_id(F.col("v"), lsh_planes(t)).alias("bucket"),
                     )
                     for t in range(N_LSH_TABLES)
                 ]
@@ -579,15 +584,9 @@ def knn_cosine_lsh_multitable(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("query_id", "neighbor_id")
         .agg(F.first("cos_sim").alias("cos_sim"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        cand.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= TOP_K)
-        .select("query_id", "neighbor_id", "cos_sim")
-        .orderBy("query_id", F.col("cos_sim").desc(), "neighbor_id")
-    )
+    return top_k_per_group(
+        cand, "query_id", "cos_sim", TOP_K, ("neighbor_id",)
+    ).orderBy("query_id", F.col("cos_sim").desc(), "neighbor_id")
 
 
 def _index_serving_oracle() -> str:
@@ -595,25 +594,9 @@ def _index_serving_oracle() -> str:
     knn_cosine_lsh, probe set = own bucket + the 8 one-bit flips. A
     corpus vector has exactly one bucket and the probe buckets are
     distinct, so each (query, neighbor) pair matches at most once."""
-    rows = ",\n    ".join(
-        f"({1 << s}, {hyperplane(64, seed=s + 1)!r}::DOUBLE[])"
-        for s in range(N_HYPERPLANES)
-    )
     flips = ", ".join(f"({0 if i < 0 else 1 << i})" for i in range(-1, N_HYPERPLANES))
     return f"""
-WITH planes(bit, plane) AS (VALUES
-    {rows}
-),
-corpus AS (
-  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-),
-buckets AS (
-  SELECT c.vec_id, c.v,
-         CAST(SUM(CASE WHEN LIST_DOT_PRODUCT(c.v, p.plane) > 0
-                       THEN p.bit ELSE 0 END) AS BIGINT) AS bucket
-  FROM corpus c CROSS JOIN planes p
-  GROUP BY c.vec_id, c.v
-),
+WITH {_lsh_buckets_sql()},
 probes(flip) AS (VALUES {flips}),
 qp AS (
   SELECT vec_id AS query_id, v AS qv, XOR(bucket, flip) AS probe
@@ -622,17 +605,11 @@ qp AS (
 ),
 cand AS (
   SELECT DISTINCT qp.query_id, e.vec_id AS neighbor_id,
-         ROUND(LIST_DOT_PRODUCT(qp.qv, e.v)
-               / (SQRT(LIST_DOT_PRODUCT(qp.qv, qp.qv))
-                  * SQRT(LIST_DOT_PRODUCT(e.v, e.v))), 6) AS cos_sim
+         {_cos_sql("qp.qv", "e.v")} AS cos_sim
   FROM qp JOIN buckets e
     ON e.bucket = qp.probe AND e.vec_id <> qp.query_id
 )
-SELECT query_id, neighbor_id, cos_sim FROM (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                               ORDER BY cos_sim DESC, neighbor_id) AS rk
-  FROM cand
-) WHERE rk <= {TOP_K}
+{_topk_sql("cand")}
 """
 
 
@@ -677,11 +654,9 @@ def persist_lsh_index(
     paid once at write; afterwards every query is a partition-pruned
     scan of its probe buckets (see ``knn_from_index``) instead of a
     full-corpus pass."""
-    dim = 64
-    planes = [hyperplane(dim, seed=s + 1) for s in range(n_planes)]
     corpus = emb.select(
         "vec_id", as_double(F.col("embedding")).alias("v")
-    ).withColumn("bucket", bucket_id(F.col("v"), planes))
+    ).withColumn("bucket", bucket_id(F.col("v"), lsh_planes(0, n_planes)))
     # one file per bucket, not one per input partition per bucket: the
     # pruned probe-scan pays per-file open cost, so the index layout
     # must be bounded by buckets, not by writer parallelism
@@ -709,14 +684,10 @@ def knn_from_index(
     filter on the index scan, so the file source prunes to the probe
     partitions (verify: PartitionFilters in the scan node).
     """
-    from pyspark.sql import Window
-
-    dim = 64
-    planes = [hyperplane(dim, seed=s + 1) for s in range(n_planes)]
     q = query_vecs.select(
         F.col("vec_id").alias("query_id"),
         as_double(F.col("embedding")).alias("qv"),
-    ).withColumn("qbucket", bucket_id(F.col("qv"), planes))
+    ).withColumn("qbucket", bucket_id(F.col("qv"), lsh_planes(0, n_planes)))
     if probes == 0:
         q = q.withColumn("probe_bucket", F.col("qbucket"))
     else:
@@ -748,13 +719,8 @@ def knn_from_index(
         .groupBy("query_id", "neighbor_id")
         .agg(F.first("cos_sim").alias("cos_sim"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= top_k)
-        .select("query_id", "neighbor_id", "cos_sim")
+    return top_k_per_group(
+        scored, "query_id", "cos_sim", top_k, ("neighbor_id",)
     )
 
 
@@ -784,17 +750,47 @@ def _fold_scores(a, c):
     return acc
 
 
-def build_ivf_centroids(
-    emb: DataFrame, n_cells: int = N_IVF_CELLS, train_cap: int = IVF_TRAIN_CAP
-):
-    """Deterministic unit-sphere centroids: evenly-strided seed sample +
-    one Lloyd refinement. The training set is a BOUNDED deterministic
-    hash-strided sample (knuth_hash(vec_id) % stride == 0, stride sized
-    from the corpus count), so the driver collects ~train_cap vectors
-    regardless of corpus size — at 100 TB this is a few MB, never the
-    corpus. Hash striding (not .sample()) keeps the training set
-    identical across partitionings and AQE re-executions; the Knuth
-    hash (not xxhash64) keeps it DuckDB-replayable.
+def _nearest_cells(v, cents, n: int = 1):
+    """(n_rows, n) indices of the ``n`` nearest unit centroids to the
+    raw vectors ``v``, nearest first: left-fold scores of the
+    unit-normalized rows, stable-sorted so ties go to the lower cell —
+    ORDER BY score DESC, cell in the SQL replay."""
+    import numpy as np
+
+    u = v / _fold_norms(v)[:, None]
+    return np.argsort(-_fold_scores(u, cents), axis=1, kind="stable")[:, :n]
+
+
+def training_sample(emb: DataFrame):
+    """The one training sample every trained index (IVF centroids, PQ
+    codebooks, PCA) learns from: a BOUNDED deterministic hash-strided
+    subset (knuth_hash(vec_id) % stride == 0, stride sized from the
+    corpus count), so the driver collects ~IVF_TRAIN_CAP vectors
+    regardless of corpus size — at 100 TB a few MB, never the corpus.
+    Hash striding (not .sample()) keeps the sample identical across
+    partitionings and AQE re-executions; the Knuth hash (not xxhash64)
+    keeps it DuckDB-replayable (``_sample_sql``).
+
+    Returns (vec_ids, mat): int64 ids and the float64 (n, dim) matrix,
+    in vec_id order — the row order every left fold replays."""
+    import numpy as np
+
+    from ytspark.operators.text import knuth_hash_col
+
+    stride = max(1, emb.count() // IVF_TRAIN_CAP)
+    pdf = (
+        emb.where(F.pmod(knuth_hash_col(F.col("vec_id")), F.lit(stride)) == 0)
+        .select("vec_id", "embedding")
+        .toPandas()
+        .sort_values("vec_id")
+    )
+    mat = np.stack(pdf["embedding"].to_numpy()).astype("float64")
+    return pdf["vec_id"].to_numpy(), mat
+
+
+def build_ivf_centroids(emb: DataFrame, n_cells: int = N_IVF_CELLS):
+    """Deterministic unit-sphere centroids trained on
+    ``training_sample``: evenly-strided seeds + one Lloyd refinement.
 
     Every float step is cross-engine reproducible by construction:
     training rows process in vec_id order, norms/dots are strict left
@@ -805,21 +801,11 @@ def build_ivf_centroids(
     function."""
     import numpy as np
 
-    from ytspark.operators.text import knuth_hash_col
-
-    n = emb.count()
-    stride = max(1, n // train_cap)
-    train = emb.where(
-        F.pmod(knuth_hash_col(F.col("vec_id")), F.lit(stride)) == 0
-    ).select("vec_id", "embedding")
-    pdf = train.toPandas().sort_values("vec_id").reset_index(drop=True)
-    m = np.stack(pdf["embedding"].to_numpy()).astype("float64")
+    _, m = training_sample(emb)
     unit = m / _fold_norms(m)[:, None]
     seed_stride = max(1, len(unit) // n_cells)
     cents = unit[::seed_stride][:n_cells].copy()
-    # np.argmax takes the FIRST max — ties to the lowest cell index,
-    # matching ORDER BY score DESC, cell in the SQL replay
-    assign = _fold_scores(unit, cents).argmax(axis=1)
+    assign = _nearest_cells(m, cents)[:, 0]
     sums = np.zeros_like(cents)
     counts = np.zeros(len(cents), dtype="int64")
     for i in range(len(unit)):  # vec_id order: the fold the oracle replays
@@ -832,19 +818,17 @@ def build_ivf_centroids(
     return cents
 
 
-def persist_ivf_index(
-    emb: DataFrame, path: str, n_cells: int = N_IVF_CELLS
-) -> None:
-    """Write the corpus parquet PARTITIONED BY its IVF cell (nearest
-    centroid), plus the centroid table next to it (``<path>__centroids``)
-    so query time needs no re-training. Cell assignment is an
-    Arrow-batched GEMM against the broadcast centroids — distributed,
-    one pass, no shuffle before the partitioned write."""
+def _write_ivf_cells(emb: DataFrame, cents, path: str, mode: str) -> None:
+    """Assign every vector of ``emb`` to its nearest centroid — an
+    Arrow-batched GEMM against the broadcast centroids, distributed,
+    one pass, no shuffle before the write — and write it parquet
+    PARTITIONED BY cell with ``mode``. ``"overwrite"`` starts a new
+    index, so it also writes the centroid table (``<path>__centroids``);
+    ``"append"`` adds to an index whose centroids stay untouched."""
     import numpy as np
     import pandas as pd
 
     spark = emb.sparkSession
-    cents = build_ivf_centroids(emb, n_cells)
     bc = spark.sparkContext.broadcast(cents)
 
     def assign(batches):
@@ -853,14 +837,11 @@ def persist_ivf_index(
             if len(pdf) == 0:
                 continue
             v = np.stack(pdf["embedding"].to_numpy()).astype("float64")
-            u = v / _fold_norms(v)[:, None]
             yield pd.DataFrame(
                 {
                     "vec_id": pdf["vec_id"],
                     "embedding": pdf["embedding"],
-                    # left-fold scores + first-max argmax: bit-identical
-                    # to the SQL replay's ORDER BY score DESC, cell
-                    "cell": _fold_scores(u, c).argmax(axis=1).astype("int32"),
+                    "cell": _nearest_cells(v, c)[:, 0].astype("int32"),
                 }
             )
 
@@ -868,13 +849,32 @@ def persist_ivf_index(
         assign, schema="vec_id bigint, embedding array<float>, cell int"
     )
     # bounded layout: one file per cell (see persist_lsh_index)
-    assigned.repartition("cell").write.mode("overwrite").partitionBy(
-        "cell"
-    ).parquet(path)
-    cent_rows = [(int(i), [float(x) for x in c]) for i, c in enumerate(cents)]
-    spark.createDataFrame(
-        cent_rows, "cell int, centroid array<double>"
-    ).write.mode("overwrite").parquet(path + "__centroids")
+    assigned.repartition("cell").write.mode(mode).partitionBy("cell").parquet(
+        path
+    )
+    if mode == "overwrite":
+        cent_rows = [(int(i), [float(x) for x in c]) for i, c in enumerate(cents)]
+        spark.createDataFrame(
+            cent_rows, "cell int, centroid array<double>"
+        ).write.mode("overwrite").parquet(path + "__centroids")
+
+
+def _read_centroids(spark: SparkSession, path: str):
+    """The centroid table of the IVF index at ``path``, as an
+    (n_cells, dim) float64 array in cell order."""
+    import numpy as np
+
+    rows = spark.read.parquet(path + "__centroids").collect()
+    return np.array([r["centroid"] for r in sorted(rows, key=lambda r: r["cell"])])
+
+
+def persist_ivf_index(
+    emb: DataFrame, path: str, n_cells: int = N_IVF_CELLS
+) -> None:
+    """Write the corpus parquet PARTITIONED BY its IVF cell (nearest
+    centroid), plus the centroid table next to it (``<path>__centroids``)
+    so query time needs no re-training."""
+    _write_ivf_cells(emb, build_ivf_centroids(emb, n_cells), path, "overwrite")
 
 
 IVF_DRIVER_BATCH_CAP = 4096  # max query vectors the driver-side path collects
@@ -901,21 +901,15 @@ def knn_from_ivf_index(
       are assigned driver-side (one tiny GEMM), then broadcast into
       the candidate join — the low-latency online-serving path.
     - larger: assignment runs DISTRIBUTED (mapInPandas against the
-      broadcast centroids — the same kernel persist_ivf_index uses for
-      corpus assignment) and the candidate join shuffles on the cell;
+      broadcast centroids, the ``_nearest_cells`` kernel the corpus
+      assignment uses) and the candidate join shuffles on the cell;
       the only collect is the distinct probed-cell id set, bounded by
       the centroid count. This is the offline batch-scoring shape.
 
     Both paths produce identical results (pinned in tests)."""
     import numpy as np
 
-    from pyspark.sql import Window
-
-    cent_rows = sorted(
-        spark.read.parquet(path + "__centroids").collect(),
-        key=lambda r: r["cell"],
-    )
-    cents = np.array([r["centroid"] for r in cent_rows])
+    cents = _read_centroids(spark, path)
     # bounded size probe: LIMIT cap+1 so deciding the path never scans
     # more than cap+1 rows, regardless of batch size
     small = (
@@ -925,12 +919,7 @@ def knn_from_ivf_index(
     if small:
         q_pdf = query_vecs.select("vec_id", "embedding").toPandas()
         qm = np.stack(q_pdf["embedding"].to_numpy()).astype("float64")
-        qu = qm / _fold_norms(qm)[:, None]
-        # stable sort on the negated left-fold scores: ties go to the
-        # lower cell index — ORDER BY score DESC, cell in the SQL replay
-        probe = np.argsort(
-            -_fold_scores(qu, cents), axis=1, kind="stable"
-        )[:, :n_probe]
+        probe = _nearest_cells(qm, cents, n_probe)
         probe_rows = [
             (int(q_pdf["vec_id"][i]), [float(x) for x in qm[i]], int(c))
             for i in range(len(q_pdf))
@@ -953,10 +942,7 @@ def knn_from_ivf_index(
                 if len(pdf) == 0:
                     continue
                 v = np.stack(pdf["embedding"].to_numpy()).astype("float64")
-                u = v / _fold_norms(v)[:, None]
-                pr = np.argsort(
-                    -_fold_scores(u, c), axis=1, kind="stable"
-                )[:, :n_probe]
+                pr = _nearest_cells(v, c, n_probe)
                 yield pd.DataFrame(
                     {
                         "query_id": pdf["vec_id"].to_numpy().repeat(n_probe),
@@ -999,13 +985,8 @@ def knn_from_ivf_index(
         .groupBy("query_id", "neighbor_id")
         .agg(F.first("cos_sim").alias("cos_sim"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    result = (
-        scored.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= top_k)
-        .select("query_id", "neighbor_id", "cos_sim")
+    result = top_k_per_group(
+        scored, "query_id", "cos_sim", top_k, ("neighbor_id",)
     )
     if small:
         # nothing persisted on the driver path — return the lazy plan
@@ -1092,26 +1073,15 @@ def _register_recall() -> None:
         # the unchanged three-pipeline oracle. Measured: one corpus ×
         # query cosine pass instead of three (the multitable pass alone
         # re-scored every colliding pair).
-        from pyspark.sql import Window
-
         emb = load_tables(spark, sf_dir, "embeddings")["embeddings"]
-        dim = 64
-        planes1 = [hyperplane(dim, seed=s + 1) for s in range(N_HYPERPLANES)]
-        tables4 = [
-            [
-                hyperplane(dim, seed=1009 * t + s + 1)
-                for s in range(N_HYPERPLANES)
-            ]
-            for t in range(N_LSH_TABLES)
-        ]
         corpus = emb.select(
             "vec_id", as_double(F.col("embedding")).alias("v")
         ).select(
             "vec_id",
             "v",
-            bucket_id(F.col("v"), planes1).alias("b1"),
+            bucket_id(F.col("v"), lsh_planes()).alias("b1"),
             F.array(
-                *[bucket_id(F.col("v"), tables4[t]) for t in range(N_LSH_TABLES)]
+                *[bucket_id(F.col("v"), lsh_planes(t)) for t in range(N_LSH_TABLES)]
             ).alias("b4"),
         )
         queries = corpus.where(F.col("vec_id") < N_QUERIES).select(
@@ -1138,16 +1108,11 @@ def _register_recall() -> None:
             # once (released by the harness's release_all_cached)
             .localCheckpoint(eager=True)
         )
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("cos_sim").desc(), F.col("neighbor_id")
-        )
 
         def topk(df: DataFrame) -> DataFrame:
-            return (
-                df.withColumn("rk", F.row_number().over(w))
-                .where(F.col("rk") <= TOP_K)
-                .select("query_id", "neighbor_id")
-            )
+            return top_k_per_group(
+                df, "query_id", "cos_sim", TOP_K, ("neighbor_id",)
+            ).select("query_id", "neighbor_id")
 
         bf = topk(scored)
         a1 = topk(scored.where("c1")).withColumn("hit1", F.lit(1))
@@ -1183,33 +1148,21 @@ def _trunc_oracle() -> str:
     from ytspark.queries import _REGISTRY
 
     bf = _REGISTRY["knn_cosine_bruteforce"].oracle
+    tcos = _cos_sql(f"q.qv[:{TRUNC_DIMS}]", f"(e.embedding::DOUBLE[])[:{TRUNC_DIMS}]")
     return f"""
 WITH q AS (
   SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
   FROM embeddings WHERE vec_id < {N_QUERIES}
 ),
-tr AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT q.query_id, e.vec_id AS neighbor_id,
-           ROW_NUMBER() OVER (PARTITION BY q.query_id ORDER BY
-             ROUND(LIST_DOT_PRODUCT(q.qv[:{TRUNC_DIMS}],
-                                    (e.embedding::DOUBLE[])[:{TRUNC_DIMS}])
-               / (SQRT(LIST_DOT_PRODUCT(q.qv[:{TRUNC_DIMS}],
-                                        q.qv[:{TRUNC_DIMS}]))
-                  * SQRT(LIST_DOT_PRODUCT((e.embedding::DOUBLE[])[:{TRUNC_DIMS}],
-                                          (e.embedding::DOUBLE[])[:{TRUNC_DIMS}]))),
-               6) DESC, e.vec_id) AS rk
-    FROM q, embeddings e WHERE e.vec_id <> q.query_id
-  ) WHERE rk <= {TOP_K}
+tscored AS (
+  SELECT q.query_id, e.vec_id AS neighbor_id, {tcos} AS cos_t
+  FROM q, embeddings e WHERE e.vec_id <> q.query_id
 ),
+tr AS ({_topk_sql("tscored", "query_id, neighbor_id", "cos_t")}),
 bf AS (SELECT query_id, neighbor_id, cos_sim FROM ({bf})),
 full_sim AS (
   SELECT tr.query_id, tr.neighbor_id,
-         ROUND(LIST_DOT_PRODUCT(q.qv, e.embedding::DOUBLE[])
-               / (SQRT(LIST_DOT_PRODUCT(q.qv, q.qv))
-                  * SQRT(LIST_DOT_PRODUCT(e.embedding::DOUBLE[],
-                                          e.embedding::DOUBLE[]))), 6)
-           AS cos_full
+         {_cos_sql("q.qv", "e.embedding::DOUBLE[]")} AS cos_full
   FROM tr JOIN q ON q.query_id = tr.query_id
   JOIN embeddings e ON e.vec_id = tr.neighbor_id
 )
@@ -1252,8 +1205,6 @@ def _register_truncation_recall() -> None:
     def embedding_truncation_recall(
         spark: SparkSession, sf_dir: str
     ) -> DataFrame:
-        from pyspark.sql import Window
-
         emb = load_tables(spark, sf_dir, "embeddings")["embeddings"]
         corpus = emb.select("vec_id", as_double(F.col("embedding")).alias("v"))
         queries = corpus.where(F.col("vec_id") < N_QUERIES).select(
@@ -1261,22 +1212,19 @@ def _register_truncation_recall() -> None:
         )
         tv = F.slice(F.col("v"), 1, TRUNC_DIMS)
         tq = F.slice(F.col("qv"), 1, TRUNC_DIMS)
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("cos_t").desc(), F.col("neighbor_id")
-        )
-        tr = (
+        tr = top_k_per_group(
             corpus.join(
                 F.broadcast(queries), F.col("vec_id") != F.col("query_id")
-            )
-            .select(
+            ).select(
                 "query_id",
                 F.col("vec_id").alias("neighbor_id"),
                 F.round(cosine(tq, tv), 6).alias("cos_t"),
-            )
-            .withColumn("rk", F.row_number().over(w))
-            .where(F.col("rk") <= TOP_K)
-            .select("query_id", "neighbor_id")
-        )
+            ),
+            "query_id",
+            "cos_t",
+            TOP_K,
+            ("neighbor_id",),
+        ).select("query_id", "neighbor_id")
         bf = knn_cosine_bruteforce(spark, sf_dir)
         # rescore the truncated picks at FULL dimension: |Q| x k rows
         full_sim = (
@@ -1439,48 +1387,17 @@ def ivf_index_append(spark: SparkSession, path: str, batch: DataFrame) -> None:
     centroid table untouched. This is production ANN-index
     maintenance: centroids retrain on a cadence (drift-monitored),
     appends land between retrains."""
-    import numpy as np
-    import pandas as pd
-
-    cent_rows = sorted(
-        spark.read.parquet(path + "__centroids").collect(),
-        key=lambda r: r["cell"],
-    )
-    cents = np.array([r["centroid"] for r in cent_rows])
-    bc = spark.sparkContext.broadcast(cents)
-
-    def assign(batches):
-        c = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            v = np.stack(pdf["embedding"].to_numpy()).astype("float64")
-            u = v / _fold_norms(v)[:, None]
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"],
-                    "embedding": pdf["embedding"],
-                    "cell": _fold_scores(u, c).argmax(axis=1).astype("int32"),
-                }
-            )
-
-    batch.select("vec_id", "embedding").mapInPandas(
-        assign, schema="vec_id bigint, embedding array<float>, cell int"
-    ).repartition("cell").write.mode("append").partitionBy("cell").parquet(path)
+    _write_ivf_cells(batch, _read_centroids(spark, path), path, "append")
 
 
 def _ivf_incr_oracle() -> str:
-    """Census oracle built on the CERTIFIED knn_cosine_ivf oracle's
-    training/assignment prefix (Knuth-strided sample -> seeds -> one
-    Lloyd refinement -> corpus_cell), cut before its serving section
-    and closed with the per-cell census the bootstrap+append store
-    must reproduce exactly."""
-    from ytspark.queries import _REGISTRY
-
-    base = _REGISTRY["knn_cosine_ivf"].oracle
-    marker = ",\nprobes AS ("
-    prefix = base[: base.index(marker)]
-    return f"""{prefix}
+    """Census oracle: the knn_cosine_ivf oracle's training and
+    assignment CTEs (Knuth-strided sample -> seeds -> one Lloyd
+    refinement -> corpus_cell), closed with the per-cell census the
+    bootstrap+append store must reproduce exactly."""
+    return f"""
+WITH {_sample_sql()},
+{_ivf_sql()}
 SELECT cell,
        CAST(COUNT(*) AS BIGINT) AS n_vectors,
        CAST(SUM(CASE WHEN vec_id >= {IVF_INCR_SPLIT} THEN 1 ELSE 0 END)
@@ -1529,8 +1446,7 @@ def ivf_index_incremental_add(spark: SparkSession, sf_dir: str) -> DataFrame:
     # table so the oracle stays a single-pass replay)
     base = emb.where(F.col("vec_id") < IVF_INCR_SPLIT)
     batch = emb.where(F.col("vec_id") >= IVF_INCR_SPLIT)
-    cents = build_ivf_centroids(emb, N_IVF_CELLS)
-    _persist_with_centroids(spark, base, cents, path)
+    _write_ivf_cells(base, build_ivf_centroids(emb), path, "overwrite")
     ivf_index_append(spark, path, batch)
     idx = spark.read.parquet(path)
     return idx.groupBy("cell").agg(
@@ -1541,37 +1457,6 @@ def ivf_index_incremental_add(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("vec_id").alias("min_vec"),
         F.max("vec_id").alias("max_vec"),
     )
-
-
-def _persist_with_centroids(spark, emb, cents, path) -> None:
-    """persist_ivf_index with externally supplied centroids."""
-    import numpy as np
-    import pandas as pd
-
-    bc = spark.sparkContext.broadcast(cents)
-
-    def assign(batches):
-        c = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            v = np.stack(pdf["embedding"].to_numpy()).astype("float64")
-            u = v / _fold_norms(v)[:, None]
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"],
-                    "embedding": pdf["embedding"],
-                    "cell": _fold_scores(u, c).argmax(axis=1).astype("int32"),
-                }
-            )
-
-    emb.select("vec_id", "embedding").mapInPandas(
-        assign, schema="vec_id bigint, embedding array<float>, cell int"
-    ).repartition("cell").write.mode("overwrite").partitionBy("cell").parquet(path)
-    cent_rows = [(int(i), [float(x) for x in c]) for i, c in enumerate(cents)]
-    spark.createDataFrame(
-        cent_rows, "cell int, centroid array<double>"
-    ).write.mode("overwrite").parquet(path + "__centroids")
 
 
 # ---------------------------------------------------------------------------
@@ -1596,10 +1481,7 @@ b AS (
   FROM embeddings WHERE label = {BITEXT_SIDE_B}
 ),
 pairs AS (
-  SELECT x_id, y_id,
-         ROUND(LIST_DOT_PRODUCT(xv, yv)
-               / (SQRT(LIST_DOT_PRODUCT(xv, xv))
-                  * SQRT(LIST_DOT_PRODUCT(yv, yv))), 6) AS cos_sim
+  SELECT x_id, y_id, {_cos_sql("xv", "yv")} AS cos_sim
   FROM a CROSS JOIN b
 ),
 fr AS (
@@ -1732,152 +1614,21 @@ IVFPQ_SHORTLIST = 40  # ADC shortlist size before the exact re-rank
 
 
 def _ivfpq_oracle() -> str:
-    """The knn_cosine_ivf and embedding_pq chained-CTE replays fused
-    into one pipeline (PQ CTEs renamed p*), plus the ADC serving
-    stage: per-(query, subspace, code) dot/norm terms (strict left
-    folds, rounded 9 dp), DECIMAL-summed across subspaces, shortlist
-    by rounded ADC with a vec_id tiebreak, exact cosine re-rank."""
-    from ytspark.operators.clustering import PQ_CODES, PQ_SUBSPACES
-    from ytspark.operators.text import knuth_hash_sql
+    """The knn_cosine_ivf and embedding_pq CTE generators over the one
+    shared training sample, plus the ADC serving stage:
+    per-(query, subspace, code) dot/norm terms (strict left folds,
+    rounded 9 dp), DECIMAL-summed across subspaces, shortlist by
+    rounded ADC with a vec_id tiebreak, exact cosine re-rank."""
+    from ytspark.operators.clustering import PQ_SUBSPACES, _pq_sql
 
     sub = 64 // PQ_SUBSPACES
-    knuth = knuth_hash_sql("vec_id")
-    ss = f"GREATEST(1, nt // {PQ_CODES})"
-
-    def d2(bv: str, cv: str) -> str:
-        return (
-            f"LIST_REDUCE(LIST_TRANSFORM(RANGE(1, {sub + 1}),"
-            f" j -> ({bv}[j] - {cv}[j]) * ({bv}[j] - {cv}[j])),"
-            " (a, x) -> a + x)"
-        )
-
+    short = _topk_sql(
+        "adc_scored", "query_id, neighbor_id, adc_sim", "adc_sim", IVFPQ_SHORTLIST
+    )
     return f"""
-WITH e AS (
-  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-),
-p AS (
-  SELECT GREATEST(1, COUNT(*) // {IVF_TRAIN_CAP}) AS stride FROM e
-),
-tru AS (
-  SELECT vec_id,
-         LIST_TRANSFORM(v, x -> x / SQRT(LIST_DOT_PRODUCT(v, v))) AS uv,
-         ROW_NUMBER() OVER (ORDER BY vec_id) AS rn,
-         COUNT(*) OVER () AS nt
-  FROM e WHERE ({knuth}) % (SELECT stride FROM p) = 0
-),
-seeds AS (
-  SELECT CAST((rn - 1) // GREATEST(1, nt // {N_IVF_CELLS}) AS INT) AS cell, uv
-  FROM tru
-  WHERE (rn - 1) % GREATEST(1, nt // {N_IVF_CELLS}) = 0
-    AND (rn - 1) // GREATEST(1, nt // {N_IVF_CELLS}) < {N_IVF_CELLS}
-),
-best AS (
-  SELECT vec_id, cell FROM (
-    SELECT t.vec_id, s.cell,
-           ROW_NUMBER() OVER (PARTITION BY t.vec_id
-                              ORDER BY LIST_DOT_PRODUCT(t.uv, s.uv) DESC,
-                                       s.cell) AS rk
-    FROM tru t CROSS JOIN seeds s
-  ) WHERE rk = 1
-),
-dimsum AS (
-  SELECT b.cell, d.i AS dim,
-         LIST_REDUCE(LIST(t.uv[d.i] ORDER BY t.vec_id), (a, x) -> a + x)
-           / COUNT(*) AS mu
-  FROM best b
-  JOIN tru t USING (vec_id)
-  CROSS JOIN (SELECT UNNEST(RANGE(1, 65)) AS i) d
-  GROUP BY b.cell, d.i
-),
-mvec AS (
-  SELECT cell, LIST(mu ORDER BY dim) AS mv FROM dimsum GROUP BY cell
-),
-cents AS (
-  SELECT s.cell,
-         COALESCE(LIST_TRANSFORM(r.mv,
-                    x -> x / SQRT(LIST_DOT_PRODUCT(r.mv, r.mv))),
-                  s.uv) AS cv
-  FROM seeds s LEFT JOIN mvec r USING (cell)
-),
-cu AS (
-  SELECT vec_id, v,
-         LIST_TRANSFORM(v, x -> x / SQRT(LIST_DOT_PRODUCT(v, v))) AS uv
-  FROM e
-),
-corpus_cell AS (
-  SELECT vec_id, cell FROM (
-    SELECT cu.vec_id, c.cell,
-           ROW_NUMBER() OVER (PARTITION BY cu.vec_id
-                              ORDER BY LIST_DOT_PRODUCT(cu.uv, c.cv) DESC,
-                                       c.cell) AS rk
-    FROM cu CROSS JOIN cents c
-  ) WHERE rk = 1
-),
-probes AS (
-  SELECT query_id, probe_cell FROM (
-    SELECT cu.vec_id AS query_id, c.cell AS probe_cell,
-           ROW_NUMBER() OVER (PARTITION BY cu.vec_id
-                              ORDER BY LIST_DOT_PRODUCT(cu.uv, c.cv) DESC,
-                                       c.cell) AS rk
-    FROM cu CROSS JOIN cents c
-    WHERE cu.vec_id < {N_QUERIES}
-  ) WHERE rk <= {N_PROBE}
-),
-ptr AS (
-  SELECT vec_id, v, ROW_NUMBER() OVER (ORDER BY vec_id) AS rn,
-         COUNT(*) OVER () AS nt
-  FROM e WHERE ({knuth}) % (SELECT stride FROM p) = 0
-),
-psub AS (SELECT UNNEST(RANGE(0, {PQ_SUBSPACES})) AS s),
-ptblocks AS (
-  SELECT ptr.vec_id, ptr.rn, ptr.nt, psub.s,
-         ptr.v[psub.s * {sub} + 1 : psub.s * {sub} + {sub}] AS bv
-  FROM ptr CROSS JOIN psub
-),
-pseeds AS (
-  SELECT s, CAST((rn - 1) // {ss} AS INT) AS code, bv
-  FROM ptblocks
-  WHERE (rn - 1) % {ss} = 0 AND (rn - 1) // {ss} < {PQ_CODES}
-),
-pbest AS (
-  SELECT s, vec_id, code FROM (
-    SELECT t.s, t.vec_id, c.code,
-           ROW_NUMBER() OVER (PARTITION BY t.s, t.vec_id
-                              ORDER BY {d2("t.bv", "c.bv")} ASC,
-                                       c.code) AS rk
-    FROM ptblocks t JOIN pseeds c ON c.s = t.s
-  ) WHERE rk = 1
-),
-pdimsum AS (
-  SELECT b.s, b.code, d.i AS dim,
-         LIST_REDUCE(LIST(t.bv[d.i] ORDER BY t.vec_id), (a, x) -> a + x)
-           / COUNT(*) AS mu
-  FROM pbest b
-  JOIN ptblocks t ON t.s = b.s AND t.vec_id = b.vec_id
-  CROSS JOIN (SELECT UNNEST(RANGE(1, {sub + 1})) AS i) d
-  GROUP BY b.s, b.code, d.i
-),
-pmvec AS (
-  SELECT s, code, LIST(mu ORDER BY dim) AS mv FROM pdimsum GROUP BY s, code
-),
-cbook AS (
-  SELECT sd.s, sd.code, COALESCE(r.mv, sd.bv) AS cv
-  FROM pseeds sd LEFT JOIN pmvec r ON r.s = sd.s AND r.code = sd.code
-),
-eblocks AS (
-  SELECT e.vec_id, psub.s,
-         e.v[psub.s * {sub} + 1 : psub.s * {sub} + {sub}] AS bv
-  FROM e CROSS JOIN psub
-),
-pqenc AS (
-  SELECT s, vec_id, code FROM (
-    SELECT t.s, t.vec_id, c.code,
-           ROW_NUMBER() OVER (PARTITION BY t.s, t.vec_id
-                              ORDER BY {d2("t.bv", "c.cv")} ASC,
-                                       c.code) AS rk
-    FROM eblocks t JOIN cbook c ON c.s = t.s
-  ) WHERE rk = 1
-),
+WITH {_sample_sql()},
+{_ivf_sql()},
+{_pq_sql()},
 qv_q AS (
   SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < {N_QUERIES}
 ),
@@ -1897,7 +1648,7 @@ cand AS (
   FROM probes p2
   JOIN corpus_cell cc
     ON cc.cell = p2.probe_cell AND cc.vec_id <> p2.query_id
-  JOIN pqenc en ON en.vec_id = cc.vec_id
+  JOIN pq_enc en ON en.vec_id = cc.vec_id
 ),
 adc AS (
   SELECT c.query_id, c.vec_id AS neighbor_id,
@@ -1908,30 +1659,20 @@ adc AS (
               AND q.code = c.code
   GROUP BY c.query_id, c.vec_id
 ),
-short AS (
-  SELECT query_id, neighbor_id, adc_sim FROM (
-    SELECT a.query_id, a.neighbor_id,
-           ROUND(a.num / (n.qn * SQRT(a.rn2)), 6) AS adc_sim,
-           ROW_NUMBER() OVER (PARTITION BY a.query_id
-                              ORDER BY ROUND(a.num / (n.qn * SQRT(a.rn2)), 6)
-                                       DESC, a.neighbor_id) AS rk
-    FROM adc a JOIN qnorm n USING (query_id)
-  ) WHERE rk <= {IVFPQ_SHORTLIST}
+adc_scored AS (
+  SELECT a.query_id, a.neighbor_id,
+         ROUND(a.num / (n.qn * SQRT(a.rn2)), 6) AS adc_sim
+  FROM adc a JOIN qnorm n USING (query_id)
 ),
+short AS ({short}),
 rer AS (
   SELECT s.query_id, s.neighbor_id, s.adc_sim,
-         ROUND(LIST_DOT_PRODUCT(q.qv, e2.v)
-               / (SQRT(LIST_DOT_PRODUCT(q.qv, q.qv))
-                  * SQRT(LIST_DOT_PRODUCT(e2.v, e2.v))), 6) AS cos_sim
+         {_cos_sql("q.qv", "e2.v")} AS cos_sim
   FROM short s
   JOIN qv_q q USING (query_id)
   JOIN e e2 ON e2.vec_id = s.neighbor_id
 )
-SELECT query_id, neighbor_id, adc_sim, cos_sim FROM (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                               ORDER BY cos_sim DESC, neighbor_id) AS rk
-  FROM rer
-) WHERE rk <= {TOP_K}
+{_topk_sql("rer", "query_id, neighbor_id, adc_sim, cos_sim")}
 """
 
 
@@ -1962,14 +1703,8 @@ SELECT query_id, neighbor_id, adc_sim, cos_sim FROM (
 )
 def knn_cosine_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
-    from pyspark.sql import Window
 
-    from ytspark.operators.clustering import (
-        PQ_CODES,
-        PQ_SUBSPACES,
-        _fold_d2,
-        build_pq_codebooks,
-    )
+    from ytspark.operators.clustering import build_pq_codebooks, pq_codes
 
     emb = load_tables(spark, sf_dir, "embeddings")["embeddings"]
     cents = build_ivf_centroids(emb)
@@ -1981,29 +1716,24 @@ def knn_cosine_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     def encode(batches):
         import numpy as np
 
-        cs, bk = bc_c.value, bc_b.value
         for pdf in batches:
             mat = np.stack(pdf["embedding"].to_numpy()).astype("float64")
-            unit = mat / _fold_norms(mat)[:, None]
-            cell = _fold_scores(unit, cs).argmax(axis=1).astype("int64")
-            frames = []
-            for s in range(m):
-                codes = (
-                    _fold_d2(mat[:, s * sub : (s + 1) * sub], bk[s])
-                    .argmin(axis=1)
-                    .astype("int64")
-                )
-                frames.append(
+            cell = _nearest_cells(mat, bc_c.value)[:, 0].astype("int64")
+            codes, _ = pq_codes(mat, bc_b.value)
+            yield pd.concat(
+                [
                     pd.DataFrame(
                         {
                             "vec_id": pdf["vec_id"].to_numpy(),
                             "cell": cell,
                             "s": s,
-                            "code": codes,
+                            "code": codes[:, s],
                         }
                     )
-                )
-            yield pd.concat(frames, ignore_index=True)
+                    for s in range(m)
+                ],
+                ignore_index=True,
+            )
 
     enc = emb.mapInPandas(
         encode, "vec_id long, cell long, s int, code int"
@@ -2037,19 +1767,16 @@ def knn_cosine_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("qv"), lambda x: x / norm(F.col("qv"))
         ).alias("uv"),
     )
-    wq = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("cell")
-    )
     probes = F.broadcast(
-        quv.crossJoin(cents_df)
-        .select(
+        top_k_per_group(
+            quv.crossJoin(cents_df).select(
+                "query_id", "cell", dot(F.col("uv"), F.col("cv")).alias("score")
+            ),
             "query_id",
-            "cell",
-            dot(F.col("uv"), F.col("cv")).alias("score"),
-        )
-        .withColumn("rk", F.row_number().over(wq))
-        .where(F.col("rk") <= N_PROBE)
-        .select("query_id", F.col("cell").alias("probe_cell"))
+            "score",
+            N_PROBE,
+            ("cell",),
+        ).select("query_id", F.col("cell").alias("probe_cell"))
     )
     qterm = F.broadcast(
         queries.crossJoin(cbook_df).select(
@@ -2091,13 +1818,8 @@ def knn_cosine_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("adc_sim"),
         )
     )
-    ws = Window.partitionBy("query_id").orderBy(
-        F.desc("adc_sim"), F.asc("neighbor_id")
-    )
-    short = (
-        adc.withColumn("rk", F.row_number().over(ws))
-        .where(F.col("rk") <= IVFPQ_SHORTLIST)
-        .select("query_id", "neighbor_id", "adc_sim")
+    short = top_k_per_group(
+        adc, "query_id", "adc_sim", IVFPQ_SHORTLIST, ("neighbor_id",)
     )
     nvec = emb.select(
         F.col("vec_id").alias("neighbor_id"),
@@ -2113,15 +1835,8 @@ def knn_cosine_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(cosine(F.col("qv"), F.col("nv")), 6).alias("cos_sim"),
         )
     )
-    wr = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id")
-    )
-    from ytspark.plans.scale import finish
-
     return finish(
-        rer.withColumn("rk", F.row_number().over(wr))
-        .where(F.col("rk") <= TOP_K)
-        .select("query_id", "neighbor_id", "adc_sim", "cos_sim"),
+        top_k_per_group(rer, "query_id", "cos_sim", TOP_K, ("neighbor_id",)),
         enc,
     )
 
@@ -2274,23 +1989,13 @@ q AS (
 scored AS (
   SELECT q.query_id, b.vec_id AS neighbor_id,
          ROUND(LIST_DOT_PRODUCT(q.qv, b.v) / (q.qn * m.mx), 9) AS acs,
-         LIST_DOT_PRODUCT(q.qv, b.v) AS ip
+         ROUND(LIST_DOT_PRODUCT(q.qv, b.v), 6) AS inner_product
   FROM q, base b, m
   WHERE b.vec_id <> q.query_id
 ),
-short AS (
-  SELECT query_id, neighbor_id, ip FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                 ORDER BY acs DESC, neighbor_id) AS rk
-    FROM scored
-  ) WHERE rk <= {MIPS_SHORTLIST}
-)
-SELECT query_id, neighbor_id, inner_product FROM (
-  SELECT query_id, neighbor_id, ROUND(ip, 6) AS inner_product,
-         ROW_NUMBER() OVER (PARTITION BY query_id
-                            ORDER BY ROUND(ip, 6) DESC, neighbor_id) AS rk
-  FROM short
-) WHERE rk <= {TOP_K}
+short AS ({_topk_sql("scored", "query_id, neighbor_id, inner_product",
+                     "acs", MIPS_SHORTLIST)})
+{_topk_sql("short", "query_id, neighbor_id, inner_product", "inner_product")}
 """,
     doc=f"MAXIMUM-INNER-PRODUCT top-k via the norm-augmentation "
         f"reduction (Shrivastava & Li 2014 / Neyshabur & Srebro 2015 "
@@ -2315,8 +2020,6 @@ SELECT query_id, neighbor_id, inner_product FROM (
     tags=("similarity", "knn", "mips"),
 )
 def knn_mips_norm_augmented(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     emb = load_tables(spark, sf_dir, "embeddings")["embeddings"]
     base = emb.select(
         "vec_id",
@@ -2342,21 +2045,11 @@ def knn_mips_norm_augmented(spark: SparkSession, sf_dir: str) -> DataFrame:
             dot(F.col("qv"), F.col("v")).alias("ip"),
         )
     )
-    ws = Window.partitionBy("query_id").orderBy(
-        F.col("acs").desc(), F.col("neighbor_id")
-    )
-    short = (
-        scored.withColumn("rk", F.row_number().over(ws))
-        .where(F.col("rk") <= MIPS_SHORTLIST)
-        .select("query_id", "neighbor_id", F.round("ip", 6).alias("inner_product"))
-    )
-    wr = Window.partitionBy("query_id").orderBy(
-        F.col("inner_product").desc(), F.col("neighbor_id")
-    )
-    return (
-        short.withColumn("rk", F.row_number().over(wr))
-        .where(F.col("rk") <= TOP_K)
-        .select("query_id", "neighbor_id", "inner_product")
+    short = top_k_per_group(
+        scored, "query_id", "acs", MIPS_SHORTLIST, ("neighbor_id",)
+    ).select("query_id", "neighbor_id", F.round("ip", 6).alias("inner_product"))
+    return top_k_per_group(
+        short, "query_id", "inner_product", TOP_K, ("neighbor_id",)
     )
 
 
@@ -2374,21 +2067,12 @@ WITH q AS (
 ),
 scored AS (
   SELECT q.query_id, q.qlabel, e.vec_id AS neighbor_id, e.label AS nlabel,
-         ROUND(LIST_DOT_PRODUCT(q.qv, e.embedding::DOUBLE[])
-               / (SQRT(LIST_DOT_PRODUCT(q.qv, q.qv))
-                  * SQRT(LIST_DOT_PRODUCT(e.embedding::DOUBLE[],
-                                          e.embedding::DOUBLE[]))), 6)
-           AS cos_sim
+         {_cos_sql("q.qv", "e.embedding::DOUBLE[]")} AS cos_sim
   FROM q, embeddings e
   WHERE e.label <> q.qlabel
 )
-SELECT query_id, CAST(qlabel AS INT) AS query_label,
-       neighbor_id, CAST(nlabel AS INT) AS negative_label, cos_sim
-FROM (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                               ORDER BY cos_sim DESC, neighbor_id) AS rk
-  FROM scored
-) WHERE rk <= {TOP_K}
+{_topk_sql("scored", "query_id, CAST(qlabel AS INT) AS query_label, "
+           "neighbor_id, CAST(nlabel AS INT) AS negative_label, cos_sim")}
 """,
     doc=f"HARD-NEGATIVE MINING — the training-data op behind every "
         f"contrastive embedding fine-tune (and the reranker-training "
@@ -2406,8 +2090,6 @@ FROM (
     tags=("similarity", "knn", "packing", "learn"),
 )
 def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     emb = load_tables(spark, sf_dir, "embeddings")["embeddings"]
     corpus = emb.select(
         "vec_id", "label", as_double(F.col("embedding")).alias("v")
@@ -2426,16 +2108,8 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("label").cast("int").alias("negative_label"),
         F.round(cosine(F.col("qv"), F.col("v")), 6).alias("cos_sim"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= TOP_K)
-        .select(
-            "query_id", "query_label", "neighbor_id", "negative_label",
-            "cos_sim",
-        )
+    return top_k_per_group(
+        scored, "query_id", "cos_sim", TOP_K, ("neighbor_id",)
     )
 
 
@@ -2455,38 +2129,14 @@ WITH q AS (
 ),
 scored AS (
   SELECT q.query_id, e.vec_id AS neighbor_id,
-         ROUND(LIST_DOT_PRODUCT(q.qv, e.embedding::DOUBLE[])
-               / (SQRT(LIST_DOT_PRODUCT(q.qv, q.qv))
-                  * SQRT(LIST_DOT_PRODUCT(e.embedding::DOUBLE[],
-                                          e.embedding::DOUBLE[]))), 6)
-           AS cos_full,
-         ROUND(LIST_DOT_PRODUCT(q.qv[1:{MAT_DIM}],
-                                (e.embedding::DOUBLE[])[1:{MAT_DIM}])
-               / (SQRT(LIST_DOT_PRODUCT(q.qv[1:{MAT_DIM}],
-                                        q.qv[1:{MAT_DIM}]))
-                  * SQRT(LIST_DOT_PRODUCT(
-                        (e.embedding::DOUBLE[])[1:{MAT_DIM}],
-                        (e.embedding::DOUBLE[])[1:{MAT_DIM}]))), 6)
+         {_cos_sql("q.qv", "e.embedding::DOUBLE[]")} AS cos_full,
+         {_cos_sql(f"q.qv[1:{MAT_DIM}]", f"(e.embedding::DOUBLE[])[1:{MAT_DIM}]")}
            AS cos_trunc
   FROM q, embeddings e
   WHERE e.vec_id <> q.query_id
 ),
-fullk AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT query_id, neighbor_id,
-           ROW_NUMBER() OVER (PARTITION BY query_id
-                              ORDER BY cos_full DESC, neighbor_id) AS rk
-    FROM scored
-  ) WHERE rk <= {TOP_K}
-),
-trunck AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT query_id, neighbor_id,
-           ROW_NUMBER() OVER (PARTITION BY query_id
-                              ORDER BY cos_trunc DESC, neighbor_id) AS rk
-    FROM scored
-  ) WHERE rk <= {TOP_K}
-)
+fullk AS ({_topk_sql("scored", "query_id, neighbor_id", "cos_full")}),
+trunck AS ({_topk_sql("scored", "query_id, neighbor_id", "cos_trunc")})
 SELECT f.query_id,
        CAST(COUNT(t.neighbor_id) AS BIGINT) AS n_overlap,
        CAST(COUNT(t.neighbor_id) * 1000 // {TOP_K} AS BIGINT)
@@ -2514,8 +2164,6 @@ GROUP BY f.query_id
 def matryoshka_truncation_recall(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from pyspark.sql import Window
-
     emb = load_tables(spark, sf_dir, "embeddings")["embeddings"]
     corpus = emb.select("vec_id", as_double(F.col("embedding")).alias("v"))
     queries = corpus.where(F.col("vec_id") < N_QUERIES).select(
@@ -2536,14 +2184,9 @@ def matryoshka_truncation_recall(
         )
     )
     def topk(score: str) -> DataFrame:
-        w = Window.partitionBy("query_id").orderBy(
-            F.col(score).desc(), F.col("neighbor_id")
-        )
-        return (
-            scored.withColumn("rk", F.row_number().over(w))
-            .where(F.col("rk") <= TOP_K)
-            .select("query_id", "neighbor_id")
-        )
+        return top_k_per_group(
+            scored, "query_id", score, TOP_K, ("neighbor_id",)
+        ).select("query_id", "neighbor_id")
 
     fullk = topk("cos_full")
     trunck = (

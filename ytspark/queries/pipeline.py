@@ -843,16 +843,16 @@ FROM merged
     tags=("pipeline", "schema-evolution", "scan", "aggregate"),
 )
 def schema_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
+    from ytspark.plans.scratch import scratch_dir
 
     docs = load_tables(spark, sf_dir, "documents")["documents"]
-    base = tempfile.mkdtemp() + "/evolving"
-    docs.where(F.col("doc_id") < 100).select("doc_id", "source").write.parquet(
-        base + "/b1"
-    )
+    base = scratch_dir(f"schema_evolution_{sf_dir}")
+    docs.where(F.col("doc_id") < 100).select("doc_id", "source").write.mode(
+        "overwrite"
+    ).parquet(base + "/b1")
     docs.where(
         (F.col("doc_id") >= 100) & (F.col("doc_id") < 200)
-    ).select("doc_id", "n_chars").write.parquet(base + "/b2")
+    ).select("doc_id", "n_chars").write.mode("overwrite").parquet(base + "/b2")
     merged = spark.read.option("mergeSchema", "true").parquet(
         base + "/b1", base + "/b2"
     )

@@ -14,7 +14,6 @@ stateful operator via applyInPandasWithState.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -26,13 +25,17 @@ from ytspark.queries import register
 def _events_stream(spark: SparkSession, sf_dir: str, max_files: int | None = None):
     """File-source stream over the events table (stage dir holds a
     symlink to the parquet file — the file source needs a directory).
+    The stage dir is the per-process scratch dir of ``sf_dir``, so
+    repeat calls reuse one dir instead of leaking one each.
     Returns the stream with ``ts`` normalized to TimestampType."""
+    from ytspark.plans.scratch import scratch_dir
+
     path = os.path.join(sf_dir, "events.parquet")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     schema = spark.read.parquet(path).schema
-    stage = tempfile.mkdtemp(prefix="ytspark_stream_")
+    stage = scratch_dir(f"stream_{sf_dir}")
     link = os.path.join(stage, "events.parquet")
-    if not os.path.exists(link):
+    if not os.path.lexists(link):
         os.symlink(path, link)
     reader = spark.readStream.schema(schema)
     if max_files is not None:
